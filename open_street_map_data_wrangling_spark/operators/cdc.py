@@ -84,7 +84,7 @@ def scd2_merge(snap: DataFrame, delta: DataFrame, gen: int = 1) -> DataFrame:
     a ``version`` column from previous merge generations (seeded to 0
     when absent), which closed-out rows keep.  Repeated merges with
     increasing ``gen`` maintain full type-2 history — that is the
-    streaming ingest path (streaming/jobs.scd2_dimension_maintenance).
+    streaming ingest path (streaming/jobs.scd2_merge_fn).
     ``delta`` must be key-unique (an ingest batch with several updates
     to one key should be reduced to latest-per-key first)."""
     if "version" not in snap.columns:

@@ -1036,7 +1036,7 @@ def q_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts ({_DRIFT_BUCKETS} rows), the totals are an aggregate of
     that tiny table broadcast back — the fact never shuffles twice.
     The counts table is the op's entire trained state — additive, so
-    streaming/jobs.drift_stats_maintenance keeps it current per
+    streaming/jobs.drift_counts_merge_fn keeps it current per
     micro-batch and drift_report serves this exact output from the
     persisted store with zero corpus scans."""
     docs = load_table(spark, sf_dir, "documents")
@@ -1257,7 +1257,7 @@ def shard_manifest_fold(granular: DataFrame) -> DataFrame:
 
 def shard_manifest_serve(spark: SparkSession, store_dir: str) -> DataFrame:
     """Serve the shard manifest from the persisted granular store
-    maintained by streaming/jobs.shard_manifest_maintenance — a fold
+    maintained by streaming/jobs.shard_manifest_merge_fn — a fold
     over rows bounded by #shards × #sources, zero corpus scans."""
     return shard_manifest_fold(
         spark.read.parquet(store_dir).select(

@@ -948,7 +948,7 @@ def build_ivfpq_index(
       (PartitionFilters on the LEADING cid level — the physical
       realization of IVF pruning).  ``__batch`` is the ingest-batch
       sublevel the streaming maintenance job
-      (streaming/jobs.ivfpq_index_maintenance) overwrites
+      (streaming/jobs.ivfpq_codes_merge_fn) overwrites
       idempotently; the initial build is batch 0.
     * ``seeds/`` — the raw first max(_K, C) rows plus the demo probe
       vector (codebook seeds, the C IVF centroids, probe): everything
@@ -1296,7 +1296,7 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> None:
     degrade the probe's scan, and the nightly compaction restores
     one-file-per-cell locality.  Stage-then-swap commit: the rewrite
     reads the files it replaces, so it materializes to a side dir
-    first (the incremental_hourly_rollup pattern)."""
+    first (the rollup_merge_fn pattern)."""
     from pyspark.sql import Window as _W
 
     codes = spark.read.parquet(f"{path}/codes")

@@ -4,15 +4,12 @@ These are not fixture queries; they are the building blocks the
 SURVEY.md §4.3 posture names for surviving scale-up, packaged so any
 query in the inventory can adopt them:
 
-* salted aggregation — two-phase groupBy for skewed keys (a hot key's
-  rows split across `n_salts` partial groups, then recombined; the
-  shuffle never concentrates a hot key on one task)
+* iterative-loop conf — AQE suspended and shuffle width derived from
+  the measured relation size for the body of a round loop
 * salted skew join — explode the small side per salt so a skewed fact
   key joins against n copies, spreading its rows over n tasks
-* two-phase distinct count — exact countDistinct without shipping
-  every (key, value) pair to one stage
 
-tests/test_scale_patterns.py proves each pattern equivalent to its
+tests/test_scale_patterns.py proves the salted join equivalent to its
 naive form, and additionally demonstrates (with plan assertions)
 dynamic partition pruning and bucketed shuffle-free joins on written
 layouts — the two write-time levers sources/sinks.py exposes.
@@ -21,9 +18,8 @@ layouts — the two write-time levers sources/sinks.py exposes.
 from __future__ import annotations
 
 import contextlib
-import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
@@ -61,14 +57,12 @@ def iter_loop_conf(
     100 TB corpus gets the full configured width.  The per-round
     joins key on unique node ids and the aggregates are map-side
     combined, so AQE's skew split has nothing to split inside these
-    loops.  Set OSMDW_ITER_AQE=true to keep AQE on instead (e.g. a
-    deployment that wants runtime skew handling in the rounds).
+    loops.
 
     Pass ``parts`` to pin the width directly instead of deriving it
     from a row count — e.g. to the materialized partition count of a
     checkpointed edge list whose partitioning the rounds reuse (AQE
     already sized that one from the data)."""
-    keep_aqe = os.environ.get("OSMDW_ITER_AQE", "").lower() in ("1", "true")
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     sp_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
     if parts is not None:
@@ -76,36 +70,13 @@ def iter_loop_conf(
     else:
         loop_sp = max(1, -(-int(n_rows) // rows_per_partition))
         loop_sp = min(loop_sp, max(int(sp_before), 1))
-    if not keep_aqe:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_sp))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", str(loop_sp))
     try:
         yield loop_sp
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         spark.conf.set("spark.sql.shuffle.partitions", sp_before)
-
-
-def salted_count(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
-    """Two-phase count per key. Phase 1 groups on (key, salt) —
-    partial counts spread a hot key over n_salts reducers; phase 2
-    recombines per key. Identical result to groupBy(key).count() for
-    any input; strictly more shuffle rows (n_salts per key), which is
-    the price of flattening the skew."""
-    salt = (F.rand(seed=42) * n_salts).cast("int").alias("__salt")
-    partial = df.select(F.col(key), salt).groupBy(key, "__salt").agg(
-        F.count("*").alias("__partial")
-    )
-    return partial.groupBy(key).agg(F.sum("__partial").alias("cnt"))
-
-
-def salted_sum(df: DataFrame, key: str, value: str, n_salts: int = 16) -> DataFrame:
-    """Two-phase sum per key (same shape as salted_count)."""
-    salt = (F.rand(seed=42) * n_salts).cast("int").alias("__salt")
-    partial = df.select(F.col(key), F.col(value), salt).groupBy(key, "__salt").agg(
-        F.sum(value).alias("__partial")
-    )
-    return partial.groupBy(key).agg(F.sum("__partial").alias(f"sum_{value}"))
 
 
 def salted_join(
@@ -176,53 +147,10 @@ def plain_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def two_phase_distinct_count(df: DataFrame, key: str, value: str) -> DataFrame:
-    """Exact distinct-count per key without a monolithic distinct
-    stage: dedup (key, value) pairs first (map-side partial distinct
-    applies), then count per key. Same result as
-    groupBy(key).agg(countDistinct(value))."""
-    return (
-        df.select(key, value)
-        .dropDuplicates([key, value])
-        .groupBy(key)
-        .agg(F.count("*").alias(f"n_distinct_{value}"))
-    )
-
-
 def explain_string(df: DataFrame, mode: str = "formatted") -> str:
     """The explain text as a string (plan-assertion helper)."""
     jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     return df._jdf.queryExecution().explainString(jmode)
-
-
-def quantile_buckets(
-    df: DataFrame, value: str, n_buckets: int = 4, accuracy: int = 10000
-) -> DataFrame:
-    """The scale path for q_ntile's global-sort quartiles: compute
-    approximate cutpoints with a fixed-memory sketch (one pass, no
-    global sort), then assign buckets via a broadcast range join.
-    Bucket sizes are approximately equal (sketch accuracy), which is
-    what a 100 TB percentile-bucketing job actually wants — ntile's
-    exact equal-splitting requires a total order that cannot scale.
-
-    NULL and NaN values cannot be range-assigned (NaN sorts above
-    +inf in Spark), so they land in an explicit overflow bucket 0
-    rather than silently vanishing from the output."""
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts = df.select(
-        F.approx_percentile(value, probs, accuracy).alias("cuts")
-    ).first()["cuts"]
-    bounds = [float("-inf"), *cuts, float("inf")]
-    ranges = df.sparkSession.createDataFrame(
-        [(i + 1, bounds[i], bounds[i + 1]) for i in range(n_buckets)],
-        "bucket int, lo double, hi double",
-    )
-    v = F.col(value)
-    return (
-        df.join(F.broadcast(ranges), (v > F.col("lo")) & (v <= F.col("hi")), "left")
-        .withColumn("bucket", F.coalesce("bucket", F.lit(0)))
-        .drop("lo", "hi")
-    )
 
 
 @query(

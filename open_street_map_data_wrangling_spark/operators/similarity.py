@@ -1773,7 +1773,7 @@ def _int8_recall_audit(
 
 def build_int8_scales(emb: DataFrame, path: str) -> None:
     """Persist the per-dim int8 scale store (pos, m) — the offline
-    backfill; streaming/jobs.int8_scales_maintenance keeps it current
+    backfill; streaming/jobs.int8_scales_merge_fn keeps it current
     as vectors arrive (max-merge, idempotent).  64 rows for the
     fixture dim: the bounded artifact int8 serving reads instead of
     re-aggregating the corpus per query."""

@@ -658,7 +658,7 @@ def q_decayed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user aggregate — at 100 TB: scan + partial agg + k-row heap.
     The streaming deployment of the same decay is REAL: X128's
     q_decayed_topk_served serves from the per-(user, bucket) count
-    store that streaming/jobs.decayed_topk_maintenance keeps
+    store that streaming/jobs.decayed_counts_merge_fn keeps
     incremental, re-weighting at serve time by shifting buckets —
     the bucketed form is exactly what makes the decay maintainable
     without rescoring history."""

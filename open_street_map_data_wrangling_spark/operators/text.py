@@ -731,7 +731,7 @@ def lm_score_docs(docs: DataFrame, counts: DataFrame) -> DataFrame:
     """Score ``docs`` against a unigram LM given as a (tok, c) counts
     table — the shared serving path behind q_lm_surprisal (in-query
     LM) and the streaming vocabulary store
-    (streaming/jobs.lm_vocab_maintenance): rescoring a new crawl
+    (streaming/jobs.lm_counts_merge_fn): rescoring a new crawl
     against yesterday's maintained LM is THIS function with
     ``spark.read.parquet(store)`` as ``counts``.  The caller pins
     ``counts`` (checkpoint or parquet read) so the (T, V) roll-up

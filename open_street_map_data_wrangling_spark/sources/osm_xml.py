@@ -137,10 +137,10 @@ def read_osm_fragments(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _parse_fragment(raw: str) -> tuple[str, dict] | None:
-    """One boundary-split fragment (lineSep scan or byte-range data
-    source — both split on the same "\\n  <" marker, so both lose the
-    element's leading '<' and possibly its own closing tag) → parsed
-    (kind, shaped) or None for non-element fragments."""
+    """One fragment of the "\\n  <" lineSep scan (the splitter eats
+    the element's leading '<' and possibly the marker of its own
+    closing tag) → parsed (kind, shaped) or None for non-element
+    fragments."""
     raw = raw.strip()
     if not raw or raw.startswith(("?", "<?", "osm", "/", "bounds")):
         return None

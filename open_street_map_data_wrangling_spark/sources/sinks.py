@@ -1,9 +1,10 @@
 """Sinks — SURVEY.md §2.1 S3/S4/S5.
 
 Reference: csv.DictWriter per shaped table (S3), one JSON doc per
-element (S4), sqlite3/pymongo load (S5). Engine equivalents are the
-DataFrameWriter formats; parquet is the engine-default (columnar,
-statistics, predicate-pushdown-able on re-read).
+element (S4), sqlite3/pymongo load (S5). Parquet is the engine's
+one file sink (columnar, statistics, predicate-pushdown-able on
+re-read); a CSV or JSON dump is a plain `df.write.csv/json` call and
+needs no wrapper here.  `write_sqlite` covers the S5 load target.
 
 `partition_by` is the 100 TB lever: a layout partitioned on the query
 key (e.g. event date) turns full scans into partition-pruned scans;
@@ -27,18 +28,6 @@ def write_parquet(
     w.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """CSV sink (reference: UnicodeDictWriter) — header on, standard
-    quoting; for interchange only (no stats, no pushdown)."""
-    df.write.mode(mode).option("header", True).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink (reference: the Mongo-variant dump) — one doc
-    per row; nested structs/arrays serialize naturally."""
-    df.write.mode(mode).json(path)
-
-
 def write_table(
     df: DataFrame,
     name: str,
@@ -53,14 +42,6 @@ def write_table(
         n, cols = bucket_by
         w = w.bucketBy(n, *cols).sortBy(*cols)
     w.saveAsTable(name)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink — the second columnar interchange format Spark ships
-    a native vectorized reader for; same pushdown/pruning behavior as
-    parquet (stripe statistics instead of row-group statistics).
-    Useful when downstream consumers are Hive/Trino-era ORC stacks."""
-    df.write.mode(mode).orc(path)
 
 
 def write_sqlite(

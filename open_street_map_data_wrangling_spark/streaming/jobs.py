@@ -18,8 +18,9 @@ Patterns covered:
   the semantics
 * stream-stream interval join (watermarks on both sides bound the
   join state) — signup→purchase correlation; batch twin: q_funnel
-* foreachBatch continuous aggregate (incremental_hourly_rollup) —
-  MERGE-style partition-overwrite rollup maintenance.
+* foreachBatch store maintenance — one entry point (maintain) driving
+  one *_merge_fn per store, e.g. rollup_merge_fn's MERGE-style
+  partition-overwrite rollup.
 
 All jobs are trigger-agnostic: tests drive them with
 `trigger(availableNow=True)` into a memory sink; production would use
@@ -128,14 +129,43 @@ def run_to_memory(result: DataFrame, name: str, output_mode: str = "complete") -
     return spark.table(name)
 
 
+def maintain(stream: DataFrame, merge_fn, checkpoint: str):
+    """Keep a store current over ``stream``: every micro-batch goes
+    through ``merge_fn(batch_df, batch_id)`` — one of the
+    ``*_merge_fn`` factories below — with progress checkpointed at
+    ``checkpoint``.
+
+    foreachBatch is the escape hatch for sinks Spark cannot express
+    declaratively (MERGE-style upserts): the merge receives a normal
+    DataFrame, so it is ordinary engine code.  The checkpoint gives
+    each source file exactly-once batch membership, but delivery is
+    at-least-once (a crash between the merge's commit and the
+    checkpoint commit re-runs the batch), so each merge documents its
+    own retry safety: an idempotent merge, a batch-keyed layout, or
+    applied-batch markers.  Returns the StreamingQuery (caller stops
+    it)."""
+    return (
+        stream.writeStream.foreachBatch(merge_fn)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+
+
 def rollup_merge_fn(spark: SparkSession, target_dir: str):
-    """The rollup's per-batch merge, exposed at module level so tests
-    can drive RETRIES directly (foreachBatch is at-least-once: a
-    crash between sink commit and checkpoint commit re-runs the
-    batch).  The merge is read-modify-write — re-applying a batch
-    would DOUBLE-COUNT its events — so each applied batch leaves a
-    marker under ``{target_dir}_applied/`` and a redelivered batch id
-    returns without touching the table.  Residual risk, documented:
+    """Continuous-aggregate merge (the 'hypertable rollup'): keep a
+    parquet table of per-(hour, event_type) counts up to date as
+    events stream in.  Each micro-batch is partially aggregated, then
+    merged with the current rollup state for the touched hours only —
+    partition-overwrite semantics, so an hour's file is rewritten only
+    when that hour receives events.
+
+    Exposed at module level so tests can drive RETRIES directly
+    (foreachBatch is at-least-once: a crash between sink commit and
+    checkpoint commit re-runs the batch).  The merge is
+    read-modify-write — re-applying a batch would DOUBLE-COUNT its
+    events — so each applied batch leaves a marker under
+    ``{target_dir}_applied/`` and a redelivered batch id returns
+    without touching the table.  Residual risk, documented:
     a crash between the partition overwrite and the marker mkdir
     still re-applies (closing that needs a transactional table
     format); the marker closes the much larger window between marker
@@ -197,28 +227,6 @@ def rollup_merge_fn(spark: SparkSession, target_dir: str):
         mfs.mkdirs(marker)
 
     return merge
-
-
-def incremental_hourly_rollup(stream: DataFrame, target_dir: str):
-    """Continuous-aggregate pattern (the 'hypertable rollup'): keep a
-    parquet table of per-(hour, event_type) counts incrementally
-    up-to-date as events stream in. Each micro-batch is partially
-    aggregated, then merged with the current rollup state for the
-    touched hours only — partition-overwrite semantics, so an hour's
-    file is rewritten only when that hour receives events.
-
-    foreachBatch is the escape hatch for sinks Spark cannot express
-    declaratively (MERGE-style upserts); the batch function receives a
-    normal DataFrame, so the merge itself is ordinary engine code —
-    see rollup_merge_fn for the retry-safety contract.
-    Returns the StreamingQuery (caller stops it)."""
-    return (
-        stream.writeStream.foreachBatch(
-            rollup_merge_fn(stream.sparkSession, target_dir)
-        )
-        .option("checkpointLocation", f"{target_dir}_ckpt")
-        .start()
-    )
 
 
 def signup_purchase_correlation(stream: DataFrame) -> DataFrame:
@@ -376,7 +384,7 @@ def quality_gated_ingest(
     )
 
 
-def scd2_dimension_maintenance(delta_stream: DataFrame, target_dir: str):
+def scd2_merge_fn(spark: SparkSession, target_dir: str):
     """Streaming SCD2: keep a type-2 dimension parquet incrementally
     consistent as (k, bal, seg) delta batches arrive.
 
@@ -387,16 +395,12 @@ def scd2_dimension_maintenance(delta_stream: DataFrame, target_dir: str):
     (operators/cdc.scd2_merge): delta broadcast, snapshot streamed,
     never shuffled.  The streaming checkpoint gives each source file
     exactly-once batch membership; the staged self-read-overwrite is
-    the same commit pattern as incremental_hourly_rollup (the merge
-    plan reads the files the overwrite deletes, so it materializes to
-    a side path first).  Batches must be key-unique — reduce an
-    ingest stream to latest-per-key upstream (deduped_events is the
-    streaming shape for that).
-
-    Returns the StreamingQuery (caller stops it)."""
+    the same commit pattern as rollup_merge_fn (the merge plan reads
+    the files the overwrite deletes, so it materializes to a side
+    path first).  Batches must be key-unique — reduce an ingest
+    stream to latest-per-key upstream (deduped_events is the
+    streaming shape for that)."""
     from ..operators.cdc import scd2_merge
-
-    spark = delta_stream.sparkSession
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -420,14 +424,10 @@ def scd2_dimension_maintenance(delta_stream: DataFrame, target_dir: str):
         spark.read.parquet(stage_dir).write.mode("overwrite").parquet(target_dir)
         fs.delete(jvm.org.apache.hadoop.fs.Path(stage_dir), True)
 
-    return (
-        delta_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", f"{target_dir}_ckpt")
-        .start()
-    )
+    return merge
 
 
-def incremental_near_dedup(doc_stream: DataFrame, store_dir: str, out_dir: str):
+def near_dedup_merge_fn(spark: SparkSession, store_dir: str, out_dir: str):
     """Streaming near-dedup: admit only documents that are not
     near-duplicates of anything already ACCEPTED, maintaining a
     MinHash band-signature store across batches.
@@ -445,24 +445,10 @@ def incremental_near_dedup(doc_stream: DataFrame, store_dir: str, out_dir: str):
     batch_id-keyed subdirectories with overwrite, so a retried batch
     rewrites its own slice instead of appending twice — together with
     the checkpoint's exactly-once file-to-batch assignment this makes
-    the whole job replay-safe (same contract the SCD2 and rollup
-    jobs document).  The store stays O(accepted docs x 4 bands) rows
-    of (bi, bv) — signatures, never text; the probe join is keyed on
-    (bi, bv), the LSH bucket posture dedup.py audits.
-
-    Returns the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            near_dedup_merge_fn(doc_stream.sparkSession, store_dir, out_dir)
-        )
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .start()
-    )
-
-
-def near_dedup_merge_fn(spark: SparkSession, store_dir: str, out_dir: str):
-    """incremental_near_dedup's per-batch merge, module-level so tests
-    can drive redeliveries directly (see the retry notes inline)."""
+    the whole job replay-safe (see the retry notes inline).  The
+    store stays O(accepted docs x 4 bands) rows of (bi, bv) —
+    signatures, never text; the probe join is keyed on (bi, bv), the
+    LSH bucket posture dedup.py audits."""
     from ..operators.dedup import (
         _capped_band_pairs,
         _lsh_bands,
@@ -575,7 +561,9 @@ def hll_merge_fn(spark: SparkSession, store_dir: str):
     is renamed into place; a crash between delete and rename is
     repaired by _recover_store before the next merge reads anything.
     Replaying a batch against any recovered state is harmless — max
-    is idempotent."""
+    is idempotent — so the store after N batches is bit-identical to
+    hll_registers() over the concatenated input (pinned in
+    tests/test_streaming.py, including under replay)."""
     from ..operators.sketches import hll_registers
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -597,24 +585,6 @@ def hll_merge_fn(spark: SparkSession, store_dir: str):
         _commit_store(fs, store_path, stage_path)
 
     return merge
-
-
-def hll_sketch_maintenance(stream: DataFrame, store_dir: str):
-    """Continuous distinct-count sketch: maintain the deterministic
-    HLL register table across micro-batches.  The store IS the
-    sketch — any reader can turn it into per-group estimates at any
-    moment without touching the event history, and because the
-    registers are md5-deterministic the store after N batches is
-    bit-identical to hll_registers() over the concatenated input
-    (pinned in tests/test_streaming.py, including under replay).
-    Returns the StreamingQuery (caller stops it)."""
-    return (
-        stream.writeStream.foreachBatch(
-            hll_merge_fn(stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
 
 
 def cms_merge_fn(spark: SparkSession, store_dir: str):
@@ -688,26 +658,13 @@ def cms_merge_fn(spark: SparkSession, store_dir: str):
     return merge
 
 
-def cms_counter_maintenance(doc_stream: DataFrame, store_dir: str):
-    """Continuous token-frequency sketch over a document stream: the
-    3x1024-counter table stays additive across micro-batches, so
-    any reader answers "how often has token X occurred so far" from
-    a few KB of state.  Marker-gated against redelivery (see
-    cms_merge_fn).  Returns the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            cms_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
-
-
 def ivfpq_codes_merge_fn(
     spark: SparkSession, index_path: str, meta: tuple[str, ...] = ()
 ):
-    """foreachBatch body for ivfpq_index_maintenance, exposed so
-    tests can drive replays directly.
+    """Streaming IVF-PQ index freshness: keep the persisted codes
+    table (operators/pq.build_ivfpq_index) current as new vectors
+    arrive, so ivfpq_search always serves the full corpus without a
+    rebuild.  Exposed so tests can drive replays directly.
 
     Per micro-batch of (vec_id, embedding) rows: rebuild the plan
     literals from the tiny seeds parquet (bounded read — the corpus
@@ -765,26 +722,6 @@ def ivfpq_codes_merge_fn(
     return merge
 
 
-def ivfpq_index_maintenance(
-    vec_stream: DataFrame, index_path: str, meta: tuple[str, ...] = ()
-):
-    """Streaming IVF-PQ index freshness: keep the persisted codes
-    table (operators/pq.build_ivfpq_index) current as new vectors
-    arrive, so ivfpq_search always serves the full corpus without a
-    rebuild.  At 100 TB this is the ingest half of the index story:
-    the build pass is the one-off backfill, this job is the nightly/
-    continuous delta, and both produce byte-identical codes because
-    they share one projection against one persisted codebook.
-    Returns the StreamingQuery (caller stops it)."""
-    return (
-        vec_stream.writeStream.foreachBatch(
-            ivfpq_codes_merge_fn(vec_stream.sparkSession, index_path, meta)
-        )
-        .option("checkpointLocation", f"{index_path}_ckpt")
-        .start()
-    )
-
-
 def int8_scales_merge_fn(spark: SparkSession, store_dir: str):
     """Incremental int8 scale store (X70/X71 serving): merge each
     micro-batch's per-dimension max|x| into the (pos, m) store with a
@@ -821,20 +758,6 @@ def int8_scales_merge_fn(spark: SparkSession, store_dir: str):
         _commit_store(fs, store_path, stage_path)
 
     return merge
-
-
-def int8_scales_maintenance(vec_stream: DataFrame, store_dir: str):
-    """Continuous int8 scale upkeep over a (vec_id, embedding)
-    stream; serving is similarity.int8_recall_served (or any int8
-    scorer) reading the 64-row store instead of re-aggregating the
-    corpus.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        vec_stream.writeStream.foreachBatch(
-            int8_scales_merge_fn(vec_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
 
 
 def lm_counts_merge_fn(spark: SparkSession, store_dir: str):
@@ -893,22 +816,6 @@ def lm_counts_merge_fn(spark: SparkSession, store_dir: str):
     return merge
 
 
-def lm_vocab_maintenance(doc_stream: DataFrame, store_dir: str):
-    """Continuous unigram-LM training over a document stream: each
-    micro-batch's train-split token counts merge additively into the
-    vocabulary store (marker-gated against redelivery, see
-    lm_counts_merge_fn).  The store IS the LM — scoring new docs
-    against it is one broadcast join (text.lm_score_docs), no
-    retraining pass.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            lm_counts_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
-
-
 def drift_counts_merge_fn(spark: SparkSession, store_dir: str):
     """Distribution-drift monitor maintenance — the (bkt, n_a, n_b)
     count table of pipeline_ops.q_quality_drift kept current over a
@@ -958,22 +865,6 @@ def drift_counts_merge_fn(spark: SparkSession, store_dir: str):
     return merge
 
 
-def drift_stats_maintenance(doc_stream: DataFrame, store_dir: str):
-    """Continuous drift monitoring over a document stream: each
-    micro-batch's per-bucket window counts merge additively into the
-    store (marker-gated against redelivery, see drift_counts_merge_fn).
-    The store IS the monitor's state — any reader folds it into the
-    q_quality_drift report at any moment without touching the
-    document history.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            drift_counts_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
-
-
 def decayed_counts_merge_fn(spark: SparkSession, store_dir: str):
     """Additive per-(user_id, bkt) event-count merge — the state
     behind the time-decayed heavy hitters (X127/X128): counts at
@@ -985,7 +876,9 @@ def decayed_counts_merge_fn(spark: SparkSession, store_dir: str):
     commit atomically with the counts via the shared stage-rename
     protocol.  The store stays |active users| x |age buckets| rows
     whatever the event volume — the compaction that makes a standing
-    trending query affordable."""
+    trending query affordable — and the streamed store equals
+    decayed_counts() over everything seen (pinned in
+    tests/test_streaming.py, including under replay)."""
     from ..operators.sketches import decayed_counts
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -1021,25 +914,6 @@ def decayed_counts_merge_fn(spark: SparkSession, store_dir: str):
     return merge
 
 
-def decayed_topk_maintenance(stream: DataFrame, store_dir: str):
-    """Continuous trending-user state over the event stream: each
-    micro-batch folds its per-(user, bucket) counts into the store
-    additively (marker-gated against redelivery, see
-    decayed_counts_merge_fn).  The store IS the trending query's
-    state — sketches.decayed_topk_from_store turns it into the
-    decayed top-k at any moment without rescoring the event history,
-    and the streamed store equals decayed_counts() over everything
-    seen (pinned in tests/test_streaming.py, including under
-    replay).  Returns the StreamingQuery (caller stops it)."""
-    return (
-        stream.writeStream.foreachBatch(
-            decayed_counts_merge_fn(stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
-
-
 def emb_drift_merge_fn(spark: SparkSession, store_dir: str):
     """Additive per-(wave, dim) fixed-point sums merge — the state
     behind the embedding-drift monitor (X132/X135): each micro-batch
@@ -1050,7 +924,9 @@ def emb_drift_merge_fn(spark: SparkSession, store_dir: str):
     `_applied_<batch_id>` markers ride INSIDE the store dir and
     commit atomically with the sums via the shared stage-rename
     protocol.  The store stays 2 x |dims| rows (128 here) whatever
-    the ingest volume."""
+    the ingest volume, and the streamed store equals drift_wave_sums()
+    over everything seen (pinned in tests/test_streaming.py,
+    including under replay)."""
     from ..operators.similarity import drift_wave_sums
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -1088,25 +964,6 @@ def emb_drift_merge_fn(spark: SparkSession, store_dir: str):
         _commit_store(fs, store_path, stage_path)
 
     return merge
-
-
-def embedding_drift_maintenance(vec_stream: DataFrame, store_dir: str):
-    """Continuous embedding-drift state over a vector ingest stream:
-    each micro-batch folds its per-(wave, dim) quantized sums into
-    the store additively (marker-gated against redelivery, see
-    emb_drift_merge_fn).  similarity.embedding_drift_from_store
-    turns the store into the drift report at any moment with zero
-    history rescans, and the streamed store equals
-    drift_wave_sums() over everything seen (pinned in
-    tests/test_streaming.py, including under replay).  Returns the
-    StreamingQuery (caller stops it)."""
-    return (
-        vec_stream.writeStream.foreachBatch(
-            emb_drift_merge_fn(vec_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
 
 
 def shard_manifest_merge_fn(spark: SparkSession, store_dir: str):
@@ -1226,20 +1083,6 @@ def text_index_merge_fn(spark: SparkSession, index_path: str):
     return merge
 
 
-def text_index_maintenance(doc_stream: DataFrame, index_path: str):
-    """Continuous inverted-index upkeep over a document stream;
-    serving is text.text_search over the maintained postings —
-    zero corpus scans.  Returns the StreamingQuery (caller stops
-    it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            text_index_merge_fn(doc_stream.sparkSession, index_path)
-        )
-        .option("checkpointLocation", f"{index_path}/postings_ckpt")
-        .start()
-    )
-
-
 def hardneg_cells_merge_fn(spark: SparkSession, index_path: str):
     """Incremental maintenance of the hard-negative cell index
     (similarity.build_hardneg_index must have run once): each
@@ -1317,20 +1160,6 @@ def hardneg_cells_merge_fn(spark: SparkSession, index_path: str):
     return merge
 
 
-def hardneg_cells_maintenance(vec_stream: DataFrame, index_path: str):
-    """Continuous hard-negative index maintenance over a vector
-    stream: new embeddings fold into the bounded per-cell samples;
-    similarity.hardneg_search serves from the maintained cells/
-    unchanged.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        vec_stream.writeStream.foreachBatch(
-            hardneg_cells_merge_fn(vec_stream.sparkSession, index_path)
-        )
-        .option("checkpointLocation", f"{index_path}/cells_ckpt")
-        .start()
-    )
-
-
 def span_gram_merge_fn(spark: SparkSession, store_dir: str):
     """ExactSubstr gram-count maintenance — the corpus-wide
     (g, cnt) table behind q_dup_spans' duplicated-gram set, kept
@@ -1382,22 +1211,6 @@ def span_gram_merge_fn(spark: SparkSession, store_dir: str):
         _commit_store(fs, store_path, stage_path)
 
     return merge
-
-
-def span_gram_maintenance(doc_stream: DataFrame, store_dir: str):
-    """Continuous ExactSubstr gram counting over a document stream:
-    each micro-batch's full-gram counts merge additively into the
-    store (marker-gated).  The store is the incremental dedup gate's
-    state — span_dup_coverage_serve scores new documents against the
-    whole streamed history without re-reading it.  Returns the
-    StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            span_gram_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
 
 
 def span_dup_coverage_serve(
@@ -1458,21 +1271,6 @@ def winnow_print_merge_fn(spark: SparkSession, store_dir: str):
         _commit_store(fs, store_path, stage_path)
 
     return merge
-
-
-def winnow_print_maintenance(doc_stream: DataFrame, store_dir: str):
-    """Continuous winnow fingerprinting over a document stream: each
-    micro-batch's prints set-union into the store; serving clone-pair
-    candidates is winnow_pairs_serve — the full MOSS matching step
-    over the store alone, zero corpus scans.  Returns the
-    StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            winnow_print_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
 
 
 def winnow_pairs_serve(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -1656,10 +1454,11 @@ def purge_contamination_bands(
 
 
 def geo_points_merge_fn(spark: SparkSession, store_dir: str):
-    """foreachBatch body for geo_index_maintenance: project each
-    micro-batch of (id, lat, lon) points through the SAME grid/
-    superblock coding the offline build uses (geo.geo_code_points —
-    byte-identical rows), stamp them with this batch's id, and
+    """Streaming freshness for the spatial grid index, so
+    proximity_search always serves the full ingest history without a
+    rebuild: project each micro-batch of (id, lat, lon) points
+    through the SAME grid/superblock coding the offline build uses
+    (geo.geo_code_points — byte-identical rows), stamp them with this batch's id, and
     dynamic-partition-overwrite into
     ``gbx=*/gby=*/__batch=<id>/`` leaves.  Replay safety comes from
     the LAYOUT (the ivfpq codes contract): a redelivered batch
@@ -1688,20 +1487,6 @@ def geo_points_merge_fn(spark: SparkSession, store_dir: str):
             bs.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     return merge
-
-
-def geo_index_maintenance(point_stream: DataFrame, store_dir: str):
-    """Streaming freshness for the spatial grid index: new points
-    land in their superblock's leaf partitions as they arrive, so
-    proximity_search always serves the full ingest history without a
-    rebuild.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        point_stream.writeStream.foreachBatch(
-            geo_points_merge_fn(point_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
 
 
 def purge_geo_index(
@@ -1803,21 +1588,6 @@ def contamination_bands_merge_fn(spark: SparkSession, store_dir: str):
 
 
 _CONTAM_BANDS_DDL = "doc_id BIGINT, bi INT, bv STRING"
-
-
-def contamination_bands_maintenance(doc_stream: DataFrame, store_dir: str):
-    """Continuous LSH-band fingerprinting of the training corpus:
-    each micro-batch's band rows set-union into the store, so the
-    fuzzy decontamination gate (contamination_check) always reflects
-    everything the model will train on.  Returns the StreamingQuery
-    (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            contamination_bands_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
 
 
 def contamination_check(
@@ -1988,21 +1758,6 @@ def image_prints_merge_fn(spark: SparkSession, store_dir: str):
     return media_prints_merge_fn(spark, store_dir, image_fingerprints)
 
 
-def image_prints_maintenance(doc_stream: DataFrame, store_dir: str):
-    """Continuous perceptual fingerprinting over an image-document
-    stream: each micro-batch's dHashes set-union into the store, so
-    the near-duplicate admission gate (image_dedup_check) always
-    reflects the full ingest history.  Returns the StreamingQuery
-    (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            image_prints_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
-
-
 def media_dedup_check(
     spark: SparkSession, store_dir: str, docs: DataFrame, fingerprints_fn
 ) -> DataFrame:
@@ -2057,22 +1812,6 @@ def image_dedup_check(
     from ..operators.multimodal import image_fingerprints
 
     return media_dedup_check(spark, store_dir, docs, image_fingerprints)
-
-
-def shard_manifest_maintenance(doc_stream: DataFrame, store_dir: str):
-    """Continuous shard planning over an ordered document stream:
-    each micro-batch is placed after the stored end offset and its
-    granular manifest merges into the store; serving the full
-    per-shard manifest is pipeline_ops.shard_manifest_serve(store) —
-    a fold over #shards × #sources rows, zero corpus scans.  Returns
-    the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            shard_manifest_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2154,21 +1893,6 @@ def bm25_index_merge_fn(
     return merge
 
 
-def bm25_index_maintenance(
-    doc_stream: DataFrame, index_path: str, meta: tuple[str, ...] = ()
-):
-    """Continuous BM25 index upkeep over a document stream; serving
-    is text.bm25_search over the maintained postings + stats — zero
-    corpus scans.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            bm25_index_merge_fn(doc_stream.sparkSession, index_path, meta)
-        )
-        .option("checkpointLocation", f"{index_path}/postings_ckpt")
-        .start()
-    )
-
-
 # ---------------------------------------------------------------------------
 # X65 — incremental gram-novelty store + admission gate (r10)
 
@@ -2203,19 +1927,6 @@ def gram_store_merge_fn(spark: SparkSession, store_dir: str):
         _commit_store(fs, store_path, stage_path)
 
     return merge
-
-
-def gram_novelty_maintenance(doc_stream: DataFrame, store_dir: str):
-    """Continuous gram-history upkeep over a document stream; the
-    serving half is novelty_gate_serve.  Returns the StreamingQuery
-    (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            gram_store_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
 
 
 def novelty_gate_serve(
@@ -2294,18 +2005,6 @@ def source_gram_merge_fn(spark: SparkSession, store_dir: str):
         _commit_store(fs, store_path, stage_path)
 
     return merge
-
-
-def source_overlap_maintenance(doc_stream: DataFrame, store_dir: str):
-    """Continuous source-gram upkeep over a document stream; serving
-    is source_overlap_serve.  Returns the StreamingQuery."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            source_gram_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
 
 
 def source_overlap_serve(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -2517,22 +2216,6 @@ def family_registry_merge_fn(spark: SparkSession, store_dir: str):
     return merge
 
 
-def family_registry_maintenance(edge_stream: DataFrame, store_dir: str):
-    """Continuous duplicate-family maintenance over an (a, b) edge
-    stream: each micro-batch folds into the registry via the
-    incremental contracted-components merge, so "which family is doc
-    X in" is answerable at any moment from |edge-touched nodes| rows
-    of state without ever re-running a pair pipeline.  Returns the
-    StreamingQuery (caller stops it)."""
-    return (
-        edge_stream.writeStream.foreachBatch(
-            family_registry_merge_fn(edge_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
-    )
-
-
 def family_registry_serve(spark: SparkSession, store_dir: str) -> DataFrame:
     """Per-family report from the maintained registry — (cluster_id,
     n_docs) over the label store alone, zero pair pipelines, zero
@@ -2688,31 +2371,6 @@ def family_registry_purge(
     _commit_store(efs, estore, estage)
     new_lab.write.mode("overwrite").parquet(str(stage_path))
     _commit_store(fs, store_path, stage_path)
-
-
-def family_registry_purge_maintenance(
-    tomb_stream: DataFrame, store_dir: str
-):
-    """Continuous delete processing for the family registry: each
-    micro-batch of tombstoned doc_ids flows through
-    family_registry_purge — touched-cluster recompute over the
-    surviving edges, untouched families untouched.  With
-    family_registry_maintenance (edge ingest) this closes the
-    registry's streaming lifecycle: adds and deletes both arrive as
-    streams, and the pinned invariant (registry == batch recompute
-    over surviving edges) holds at every micro-batch boundary.
-    Purge idempotency (already-purged ids contract to an empty
-    touched set) makes at-least-once delivery safe without markers.
-    Returns the StreamingQuery (caller stops it)."""
-    return (
-        tomb_stream.writeStream.foreachBatch(
-            lambda batch_df, batch_id: family_registry_purge(
-                tomb_stream.sparkSession, store_dir, batch_df
-            )
-        )
-        .option("checkpointLocation", f"{store_dir}_purge_ckpt")
-        .start()
-    )
 
 
 def family_registry_compact(

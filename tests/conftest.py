@@ -26,9 +26,9 @@ def sf_dir():
 # `slow` by name here (one maintainable set, no per-file decorator
 # drift).  `pytest -m "not slow"` is the <5-minute iteration lane;
 # plain `pytest tests/` still runs everything (CI / judge lane).
-# Names measured from a full --durations run at r11 HEAD; a renamed
-# test silently falls back into the fast lane, which only costs lane
-# time, never coverage.
+# Names measured from a full --durations run at r11 HEAD.  Matching is
+# by name, so tests/test_inventory.py checks that every entry is a real
+# test: a rename or deletion must update this set.
 
 _SLOW_TESTS = {
     "test_all_bucket_pairs_equals_bruteforce",
@@ -39,7 +39,6 @@ _SLOW_TESTS = {
     "test_bpe_merges_match_pure_python_replay",
     "test_capped_band_pairs_drop_semantics",
     "test_cms_counter_maintenance_needs_and_uses_markers",
-    "test_datasource_matches_mapinpandas_path",
     "test_drift_stats_maintenance_matches_batch_and_serves_report",
     "test_etl_to_sqlite_reference_migration",
     "test_every_registered_query_survives_empty_tables",
@@ -87,7 +86,6 @@ _SLOW_TESTS = {
     "test_shard_manifest_maintenance_matches_one_shot_plan",
     "test_source_overlap_maintenance_matches_inline",
     "test_span_gram_store_matches_batch_and_gates_new_docs",
-    "test_stream_reader_ingests_file_drops",
     "test_text_index_maintenance_matches_batch_build",
     "test_update_stamps_is_idempotent_and_sound",
     "test_weighted_sample_rule_matches_python",

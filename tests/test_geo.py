@@ -345,7 +345,7 @@ def test_proximity_search_matches_brute_force(spark, tmp_path):
 
 def test_geo_index_maintenance_replay_and_purge(spark, tmp_path):
     """X93 lifecycle: streaming two point chunks through
-    geo_index_maintenance yields the same rows a batch build over
+    geo_points_merge_fn yields the same rows a batch build over
     the concatenated points produces (same grid coding, __batch
     aside); a redelivered batch is a no-op (leaf-overwrite layout);
     proximity_search over the maintained store equals the batch
@@ -363,8 +363,8 @@ def test_geo_index_maintenance_replay_and_purge(spark, tmp_path):
         load_table,
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        geo_index_maintenance,
         geo_points_merge_fn,
+        maintain,
         purge_geo_index,
     )
 
@@ -380,7 +380,7 @@ def test_geo_index_maintenance_replay_and_purge(spark, tmp_path):
     build_geo_index(b1, inc)
     b2.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b2.schema).parquet(src)
-    q = geo_index_maintenance(stream, inc)
+    q = maintain(stream, geo_points_merge_fn(spark, inc), f"{inc}_ckpt")
     try:
         q.processAllAvailable()
     finally:

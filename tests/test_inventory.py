@@ -170,3 +170,24 @@ def test_bench_gate_always_check_ignores_floor():
         {"queries": {"q_image_gif": 0.20}},
     )
     assert failures2 == []
+
+
+def test_slow_lane_names_are_real_tests():
+    """conftest.py marks the slow lane by test NAME, so a renamed or
+    deleted test leaves a dead entry behind (and a renamed slow test
+    silently joins the fast lane).  Every listed name must be a
+    ``def test_*`` in some tests/test_*.py."""
+    import ast
+    import re
+
+    tree = ast.parse((ROOT / "tests" / "conftest.py").read_text())
+    slow = next(
+        ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "_SLOW_TESTS" for t in node.targets)
+    )
+    defined = set()
+    for path in (ROOT / "tests").glob("test_*.py"):
+        defined |= set(re.findall(r"^def (test_\w+)", path.read_text(), re.M))
+    assert slow and not slow - defined, sorted(slow - defined)

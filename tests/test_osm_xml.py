@@ -226,6 +226,51 @@ def test_multi_file_extract(spark, tmp_path_factory):
     assert tables["nodes"].select("id").distinct().count() > N_NODES
 
 
+def test_byte_range_splits_parse_each_element_once(spark, tmp_path_factory):
+    """Split invariance of the lineSep scan: cutting one extract into
+    several byte-range splits — one cut inside a "\\n  <" marker,
+    others mid-element — yields every relation row-identical to the
+    single-split parse: the line reader hands a record that straddles
+    a cut to exactly one split, so each element parses exactly once
+    wherever the cuts land."""
+    from open_street_map_data_wrangling_spark.sources.osm_xml import (
+        read_osm_fragments,
+    )
+
+    xml = _make_xml()
+    path = tmp_path_factory.mktemp("osm_splits") / "map.osm"
+    path.write_text(xml)
+    size = len(xml.encode())
+    markers = [i for i in range(size) if xml.startswith("\n  <", i)]
+
+    def parse_all():
+        return {
+            t: sorted(map(tuple, df.collect()))
+            for t, df in parse_osm_xml(spark, str(path)).items()
+        }
+
+    whole = parse_all()
+    assert len(whole) == 8 and whole["nodes"] and whole["ways_nodes"]
+
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = [spark.conf.get(k) for k in keys]
+    mid_marker = markers[len(markers) // 4] + 2
+    try:
+        spark.conf.set(keys[1], "0")
+        for split in (mid_marker, 997):
+            spark.conf.set(keys[0], str(split))
+            n_splits = read_osm_fragments(spark, str(path)).rdd.getNumPartitions()
+            assert n_splits >= 3, (split, n_splits)
+            cuts = range(split, size, split)
+            assert any(
+                not any(m <= c <= m + 4 for m in markers) for c in cuts
+            ), "some cut must land mid-element"
+            assert parse_all() == whole, split
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+
+
 def test_write_osm_sample_roundtrip(spark, tmp_path_factory):
     """S2 faithful form: sampled .osm file is well-formed and
     re-parseable; every 10th element kept."""

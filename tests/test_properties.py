@@ -11,7 +11,6 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
-from open_street_map_data_wrangling_spark.operators.scale import salted_count
 from open_street_map_data_wrangling_spark.plans.pipeline import build_pipeline
 
 _SETTINGS = dict(
@@ -31,20 +30,6 @@ def _get_spark():
 
         _spark = get_spark("osmdw-props", master="local[2]", shuffle_partitions=2)
     return _spark
-
-
-@given(keys=st.lists(st.integers(min_value=0, max_value=5), min_size=1, max_size=200))
-@settings(**_SETTINGS)
-def test_salted_count_equals_plain_count(keys):
-    """Salted two-phase aggregation ≡ plain groupBy for any key
-    distribution, including fully skewed (all rows one key)."""
-    spark = _get_spark()
-    df = spark.createDataFrame([(k,) for k in keys], "k int")
-    got = {r.k: r.cnt for r in salted_count(df, "k", n_salts=4).collect()}
-    exp = {}
-    for k in keys:
-        exp[k] = exp.get(k, 0) + 1
-    assert got == exp
 
 
 @given(

@@ -121,7 +121,8 @@ def test_incremental_hourly_rollup(spark, tmp_path):
     batch aggregate of all events seen (the continuous-aggregate
     invariant), rewriting only touched hour partitions."""
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        incremental_hourly_rollup,
+        maintain,
+        rollup_merge_fn,
     )
 
     src = str(tmp_path / "src")
@@ -139,7 +140,7 @@ def test_incremental_hourly_rollup(spark, tmp_path):
     mk([("2024-01-01 10:05:00", "click"), ("2024-01-01 10:20:00", "view"),
         ("2024-01-01 11:05:00", "click")]).write.mode("overwrite").parquet(src)
     stream = events_file_stream(spark, src)
-    q = incremental_hourly_rollup(stream, target)
+    q = maintain(stream, rollup_merge_fn(spark, target), f"{target}_ckpt")
     try:
         q.processAllAvailable()
         # second batch touches hour 11 only (hour 10 partition untouched)
@@ -332,7 +333,8 @@ def test_scd2_dimension_maintenance(spark, tmp_path):
     carry a closed-out old version plus a current row at the new
     generation; untouched and inserted keys stay current."""
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        scd2_dimension_maintenance,
+        maintain,
+        scd2_merge_fn,
     )
 
     src = str(tmp_path / "deltas")
@@ -343,7 +345,7 @@ def test_scd2_dimension_maintenance(spark, tmp_path):
 
     mk([(1, 10.0, "A"), (2, 20.0, "B")]).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema("k long, bal double, seg string").parquet(src)
-    q = scd2_dimension_maintenance(stream, target)
+    q = maintain(stream, scd2_merge_fn(spark, target), f"{target}_ckpt")
     try:
         q.processAllAvailable()
         mk([(1, 15.0, "A"), (2, 20.0, "B"), (3, 30.0, "C")]).write.mode(
@@ -370,7 +372,8 @@ def test_incremental_near_dedup_stream(spark, tmp_path):
     rejected by the signature store; its genuinely new doc must be
     accepted; batch-internal duplicates resolve to the lowest id."""
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        incremental_near_dedup,
+        maintain,
+        near_dedup_merge_fn,
     )
 
     src = str(tmp_path / "docs")
@@ -389,7 +392,7 @@ def test_incremental_near_dedup_stream(spark, tmp_path):
         "overwrite"
     ).parquet(src)
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = incremental_near_dedup(stream, store, out)
+    q = maintain(stream, near_dedup_merge_fn(spark, store, out), f"{out}_ckpt")
     try:
         q.processAllAvailable()
         # batch 2: near-copy of accepted doc 1 + a genuinely new doc
@@ -457,7 +460,8 @@ def test_scd2_three_generations_and_empty_batch(spark, tmp_path):
     the same key leaves two closed rows + one current) and an empty
     delta batch must leave the dimension untouched."""
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        scd2_dimension_maintenance,
+        maintain,
+        scd2_merge_fn,
     )
 
     src = str(tmp_path / "deltas")
@@ -468,7 +472,7 @@ def test_scd2_three_generations_and_empty_batch(spark, tmp_path):
 
     mk([(1, 10.0, "A")]).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema("k long, bal double, seg string").parquet(src)
-    q = scd2_dimension_maintenance(stream, target)
+    q = maintain(stream, scd2_merge_fn(spark, target), f"{target}_ckpt")
     try:
         q.processAllAvailable()
         mk([(1, 20.0, "A")]).write.mode("append").parquet(src)
@@ -553,7 +557,7 @@ def test_near_dedup_soak_restart_and_redeliver(spark, tmp_path):
     crash between the marker write and the checkpoint commit.  The
     accepted set must equal a clean no-failure sequential run's."""
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        incremental_near_dedup,
+        maintain,
         near_dedup_merge_fn,
     )
 
@@ -595,7 +599,7 @@ def test_near_dedup_soak_restart_and_redeliver(spark, tmp_path):
         mode = "overwrite" if bid == 0 else "append"
         mk(rows).write.mode(mode).parquet(src)
         stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        q = incremental_near_dedup(stream, store, out)
+        q = maintain(stream, near_dedup_merge_fn(spark, store, out), f"{out}_ckpt")
         try:
             q.processAllAvailable()
         finally:
@@ -613,7 +617,8 @@ def test_scd2_soak_survives_restarts(spark, tmp_path):
     stack exactly like the single-query run (versions are a pure
     function of batch arrival order, not query lifetime)."""
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        scd2_dimension_maintenance,
+        maintain,
+        scd2_merge_fn,
     )
 
     src = str(tmp_path / "deltas")
@@ -627,7 +632,7 @@ def test_scd2_soak_survives_restarts(spark, tmp_path):
         mode = "overwrite" if i == 0 else "append"
         mk(rows).write.mode(mode).parquet(src)
         stream = spark.readStream.schema("k long, bal double, seg string").parquet(src)
-        q = scd2_dimension_maintenance(stream, target)
+        q = maintain(stream, scd2_merge_fn(spark, target), f"{target}_ckpt")
         try:
             q.processAllAvailable()
         finally:
@@ -658,7 +663,7 @@ def test_hll_sketch_maintenance_matches_batch_and_survives_replay(
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
         hll_merge_fn,
-        hll_sketch_maintenance,
+        maintain,
     )
 
     src = str(tmp_path / "src")
@@ -685,7 +690,7 @@ def test_hll_sketch_maintenance_matches_batch_and_survives_replay(
     batch2 = mk(300, 200, "view")
     batch1.write.mode("overwrite").parquet(src)
     stream = events_file_stream(spark, src)
-    q = hll_sketch_maintenance(stream, store)
+    q = maintain(stream, hll_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         batch2.write.mode("append").parquet(src)
@@ -731,8 +736,8 @@ def test_cms_counter_maintenance_needs_and_uses_markers(spark, tmp_path):
     applied-batch marker (counter addition itself double-counts,
     which the test proves by deleting the marker and re-merging)."""
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        cms_counter_maintenance,
         cms_merge_fn,
+        maintain,
     )
 
     src = str(tmp_path / "src")
@@ -754,7 +759,7 @@ def test_cms_counter_maintenance_needs_and_uses_markers(spark, tmp_path):
     stream = (
         spark.readStream.schema(b1.schema).parquet(src)
     )
-    q = cms_counter_maintenance(stream, store)
+    q = maintain(stream, cms_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -825,7 +830,7 @@ def test_ivfpq_index_maintenance_matches_rebuild_and_survives_replay(
     from open_street_map_data_wrangling_spark.sources.catalog import load_table
     from open_street_map_data_wrangling_spark.streaming.jobs import (
         ivfpq_codes_merge_fn,
-        ivfpq_index_maintenance,
+        maintain,
     )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
@@ -842,7 +847,7 @@ def test_ivfpq_index_maintenance_matches_rebuild_and_survives_replay(
     stream = spark.readStream.schema(
         "vec_id bigint, embedding array<float>"
     ).parquet(src)
-    q = ivfpq_index_maintenance(stream, maintained)
+    q = maintain(stream, ivfpq_codes_merge_fn(spark, maintained), f"{maintained}_ckpt")
     try:
         q.processAllAvailable()
         rest.filter(F.col("vec_id") >= 400).write.mode("append").parquet(src)
@@ -881,7 +886,8 @@ def test_ivfpq_maintenance_soak_survives_restarts(spark, tmp_path):
     from open_street_map_data_wrangling_spark.operators import pq
     from open_street_map_data_wrangling_spark.sources.catalog import load_table
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        ivfpq_index_maintenance,
+        ivfpq_codes_merge_fn,
+        maintain,
     )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
@@ -899,7 +905,7 @@ def test_ivfpq_maintenance_soak_survives_restarts(spark, tmp_path):
         stream = spark.readStream.schema(
             "vec_id bigint, embedding array<float>"
         ).parquet(src)
-        q = ivfpq_index_maintenance(stream, maint)
+        q = maintain(stream, ivfpq_codes_merge_fn(spark, maint), f"{maint}_ckpt")
         try:
             q.processAllAvailable()
         finally:
@@ -933,7 +939,7 @@ def test_lm_vocab_maintenance_matches_batch_and_serves_scoring(
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
         lm_counts_merge_fn,
-        lm_vocab_maintenance,
+        maintain,
     )
 
     src = str(tmp_path / "src")
@@ -955,7 +961,7 @@ def test_lm_vocab_maintenance_matches_batch_and_serves_scoring(
     b2 = mk(10, ["the cat ran far ", "zz qq zz"])
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = lm_vocab_maintenance(stream, store)
+    q = maintain(stream, lm_counts_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -1027,7 +1033,7 @@ def test_drift_stats_maintenance_matches_batch_and_serves_report(
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
         drift_counts_merge_fn,
-        drift_stats_maintenance,
+        maintain,
     )
 
     src = str(tmp_path / "src")
@@ -1047,7 +1053,7 @@ def test_drift_stats_maintenance_matches_batch_and_serves_report(
     b2 = mk(10, ["medium " * 20, "tiny", "w" * 520])
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = drift_stats_maintenance(stream, store)
+    q = maintain(stream, drift_counts_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -1092,13 +1098,13 @@ def test_drift_stats_maintenance_matches_batch_and_serves_report(
 
 def test_text_index_maintenance_matches_batch_build(spark, tmp_path):
     """Incremental inverted index (r09): streaming two corpus chunks
-    through text_index_maintenance yields the same postings (and the
+    through text_index_merge_fn yields the same postings (and the
     same conjunctive search hits, including cross-chunk conjunctions)
     as build_text_index over the concatenated corpus; redelivery is a
     no-op (idempotent distinct-union)."""
     import open_street_map_data_wrangling_spark.operators.text as tx
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        text_index_maintenance,
+        maintain,
         text_index_merge_fn,
     )
 
@@ -1117,7 +1123,7 @@ def test_text_index_maintenance_matches_batch_build(spark, tmp_path):
     inc = str(tmp_path / "inc_ix")
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = text_index_maintenance(stream, inc)
+    q = maintain(stream, text_index_merge_fn(spark, inc), f"{inc}/postings_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -1169,8 +1175,8 @@ def test_hardneg_cells_maintenance_matches_rebuild(spark, tmp_path):
         load_table,
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        hardneg_cells_maintenance,
         hardneg_cells_merge_fn,
+        maintain,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -1186,7 +1192,7 @@ def test_hardneg_cells_maintenance_matches_rebuild(spark, tmp_path):
     src = str(tmp_path / "vec_src")
     b2.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b2.schema).parquet(src)
-    q = hardneg_cells_maintenance(stream, inc)
+    q = maintain(stream, hardneg_cells_merge_fn(spark, inc), f"{inc}/cells_ckpt")
     try:
         q.processAllAvailable()
     finally:
@@ -1237,8 +1243,8 @@ def test_span_gram_store_matches_batch_and_gates_new_docs(
     no-op."""
     import open_street_map_data_wrangling_spark.operators.dedup as dd
     from open_street_map_data_wrangling_spark.streaming.jobs import (
+        maintain,
         span_dup_coverage_serve,
-        span_gram_maintenance,
         span_gram_merge_fn,
     )
 
@@ -1259,7 +1265,7 @@ def test_span_gram_store_matches_batch_and_gates_new_docs(
     store = str(tmp_path / "gram_store")
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = span_gram_maintenance(stream, store)
+    q = maintain(stream, span_gram_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -1320,7 +1326,7 @@ def test_winnow_print_maintenance_matches_batch_and_is_idempotent(
     spark, tmp_path, monkeypatch
 ):
     """Incremental clone-detection index (r09): streaming two corpus
-    chunks through winnow_print_maintenance and serving pairs from
+    chunks through winnow_print_merge_fn and serving pairs from
     the store must equal the one-shot q_winnow_pairs over the
     concatenated corpus (streamed == batch, the store-fed contract
     all five sibling stores pin), and replaying an already-applied
@@ -1328,8 +1334,8 @@ def test_winnow_print_maintenance_matches_batch_and_is_idempotent(
     by construction (no markers needed)."""
     import open_street_map_data_wrangling_spark.operators.text as tx
     from open_street_map_data_wrangling_spark.streaming.jobs import (
+        maintain,
         winnow_pairs_serve,
-        winnow_print_maintenance,
         winnow_print_merge_fn,
     )
 
@@ -1349,7 +1355,7 @@ def test_winnow_print_maintenance_matches_batch_and_is_idempotent(
     b2 = spark.createDataFrame(rows[3:], schema)
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = winnow_print_maintenance(stream, store)
+    q = maintain(stream, winnow_print_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -1385,7 +1391,7 @@ def test_shard_manifest_maintenance_matches_one_shot_plan(spark, tmp_path):
     marker present is a no-op (placement is not idempotent)."""
     import open_street_map_data_wrangling_spark.operators.pipeline_ops as po
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        shard_manifest_maintenance,
+        maintain,
         shard_manifest_merge_fn,
     )
 
@@ -1408,7 +1414,7 @@ def test_shard_manifest_maintenance_matches_one_shot_plan(spark, tmp_path):
     )
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = shard_manifest_maintenance(stream, store)
+    q = maintain(stream, shard_manifest_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -1440,7 +1446,7 @@ def test_shard_manifest_maintenance_matches_one_shot_plan(spark, tmp_path):
 
 def test_bm25_index_maintenance_matches_batch_build(spark, tmp_path):
     """Incremental BM25 index (r10): streaming two corpus chunks
-    through bm25_index_maintenance yields the same postings AND the
+    through bm25_index_merge_fn yields the same postings AND the
     same 1-row stats as build_bm25_index over the concatenated
     corpus, serving an identical ranking; redelivery is a no-op and a
     doc re-ingested with MODIFIED text replaces its old posting rows
@@ -1448,8 +1454,8 @@ def test_bm25_index_maintenance_matches_batch_build(spark, tmp_path):
     coexisting with them."""
     import open_street_map_data_wrangling_spark.operators.text as tx
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        bm25_index_maintenance,
         bm25_index_merge_fn,
+        maintain,
     )
 
     schema = "doc_id long, text string, lang string, source string"
@@ -1467,7 +1473,7 @@ def test_bm25_index_maintenance_matches_batch_build(spark, tmp_path):
     inc = str(tmp_path / "inc_bm25")
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = bm25_index_maintenance(stream, inc)
+    q = maintain(stream, bm25_index_merge_fn(spark, inc), f"{inc}/postings_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -1518,7 +1524,7 @@ def test_bm25_index_maintenance_matches_batch_build(spark, tmp_path):
 
 def test_int8_scales_maintenance_matches_batch_and_serves(spark, tmp_path):
     """Incremental int8 scale store (r11): streaming two vector
-    chunks through int8_scales_maintenance yields EXACTLY the batch
+    chunks through int8_scales_merge_fn yields EXACTLY the batch
     build over the concatenated corpus (per-dim max is exactly
     mergeable — float max of the same doubles, no arithmetic);
     redelivery is a no-op; the MONOTONE property holds (a chunk with
@@ -1530,8 +1536,8 @@ def test_int8_scales_maintenance_matches_batch_and_serves(spark, tmp_path):
         load_table,
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        int8_scales_maintenance,
         int8_scales_merge_fn,
+        maintain,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -1542,7 +1548,7 @@ def test_int8_scales_maintenance_matches_batch_and_serves(spark, tmp_path):
     store = str(tmp_path / "int8_scales")
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(emb.schema).parquet(src)
-    q = int8_scales_maintenance(stream, store)
+    q = maintain(stream, int8_scales_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -1644,8 +1650,8 @@ def test_gram_novelty_gate_matches_batch_attribution(spark, tmp_path):
     scores the exact gram fraction; redelivered merges are no-ops and
     after merging chunk 2 the same gate drops to 0 for all."""
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        gram_novelty_maintenance,
         gram_store_merge_fn,
+        maintain,
         novelty_gate_serve,
     )
 
@@ -1662,7 +1668,7 @@ def test_gram_novelty_gate_matches_batch_attribution(spark, tmp_path):
     store = str(tmp_path / "gram_store")
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = gram_novelty_maintenance(stream, store)
+    q = maintain(stream, gram_store_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
     finally:
@@ -1694,8 +1700,8 @@ def test_source_overlap_maintenance_matches_inline(spark, tmp_path):
     concatenated corpus; redelivery is a no-op."""
     import open_street_map_data_wrangling_spark.operators.text as tx
     from open_street_map_data_wrangling_spark.streaming.jobs import (
+        maintain,
         source_gram_merge_fn,
-        source_overlap_maintenance,
         source_overlap_serve,
     )
 
@@ -1711,7 +1717,7 @@ def test_source_overlap_maintenance_matches_inline(spark, tmp_path):
     store = str(tmp_path / "sg_store")
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(docs.schema).parquet(src)
-    q = source_overlap_maintenance(stream, store)
+    q = maintain(stream, source_gram_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -1735,7 +1741,7 @@ def test_source_overlap_maintenance_matches_inline(spark, tmp_path):
 
 def test_contamination_store_serves_inline_gate(spark, tmp_path):
     """Served fuzzy decontamination (r12): streaming the TRAIN split
-    in two chunks through contamination_bands_maintenance builds a
+    in two chunks through contamination_bands_merge_fn builds a
     band store equal to the batch derivation (set-union, idempotent
     on redelivery), and contamination_check over the fixture's test
     split answers EXACTLY inline q_fuzzy_contamination — the eval
@@ -1748,9 +1754,9 @@ def test_contamination_store_serves_inline_gate(spark, tmp_path):
         load_table,
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        contamination_bands_maintenance,
         contamination_bands_merge_fn,
         contamination_check,
+        maintain,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -1765,7 +1771,7 @@ def test_contamination_store_serves_inline_gate(spark, tmp_path):
     store = str(tmp_path / "contam_bands")
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = contamination_bands_maintenance(stream, store)
+    q = maintain(stream, contamination_bands_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -1808,7 +1814,7 @@ def test_contamination_store_serves_inline_gate(spark, tmp_path):
 
 def test_image_prints_store_serves_dedup_gate(spark, tmp_path):
     """Standing image-dedup gate (r12): streaming half the corpus's
-    images through image_prints_maintenance builds a fingerprint
+    images through image_prints_merge_fn builds a fingerprint
     store equal to the batch derivation (idempotent set-union), and
     image_dedup_check over the OTHER half returns exactly the inline
     q_image_dedup pairs that cross the halves — upload screening
@@ -1822,8 +1828,8 @@ def test_image_prints_store_serves_dedup_gate(spark, tmp_path):
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
         image_dedup_check,
-        image_prints_maintenance,
         image_prints_merge_fn,
+        maintain,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -1836,7 +1842,7 @@ def test_image_prints_store_serves_dedup_gate(spark, tmp_path):
     store = str(tmp_path / "image_prints")
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = image_prints_maintenance(stream, store)
+    q = maintain(stream, image_prints_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         b2.write.mode("append").parquet(src)
@@ -1873,7 +1879,7 @@ def test_image_prints_store_serves_dedup_gate(spark, tmp_path):
 def test_family_registry_streams_to_batch_clustering(spark, tmp_path):
     """Incremental family registry (X102): streaming the three
     channels' edges in interleaved chunks through
-    family_registry_maintenance lands on EXACTLY the batch
+    family_registry_merge_fn lands on EXACTLY the batch
     connected-components labeling (same partition, same min-id
     representatives); a redelivered chunk contracts to self-loops
     and is a bit-identical no-op (the restart soak); the served
@@ -1887,9 +1893,9 @@ def test_family_registry_streams_to_batch_clustering(spark, tmp_path):
         q_image_dedup,
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
-        family_registry_maintenance,
         family_registry_merge_fn,
         family_registry_serve,
+        maintain,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -1909,7 +1915,7 @@ def test_family_registry_streams_to_batch_clustering(spark, tmp_path):
     store = str(tmp_path / "family_registry")
     c1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(edges.schema).parquet(src)
-    q = family_registry_maintenance(stream, store)
+    q = maintain(stream, family_registry_merge_fn(spark, store), f"{store}_ckpt")
     try:
         q.processAllAvailable()
         c2.write.mode("append").parquet(src)
@@ -2114,7 +2120,7 @@ def test_ingest_registry_wave_redelivery_is_noop(spark, tmp_path):
 
 
 def test_family_registry_purge_streams(spark, tmp_path):
-    """family_registry_purge_maintenance: tombstones arriving as a
+    """family_registry_purge under maintain: tombstones arriving as a
     STREAM purge the registry micro-batch by micro-batch, and after
     any prefix of deletes the registry equals a from-scratch
     clustering of the surviving edges (the pinned invariant at every
@@ -2125,7 +2131,8 @@ def test_family_registry_purge_streams(spark, tmp_path):
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
         family_registry_merge_fn,
-        family_registry_purge_maintenance,
+        family_registry_purge,
+        maintain,
     )
 
     edges = spark.createDataFrame(
@@ -2140,7 +2147,11 @@ def test_family_registry_purge_streams(spark, tmp_path):
         "overwrite"
     ).parquet(src)
     stream = spark.readStream.schema("doc_id BIGINT").parquet(src)
-    q = family_registry_purge_maintenance(stream, store)
+    q = maintain(
+        stream,
+        lambda batch_df, batch_id: family_registry_purge(spark, store, batch_df),
+        f"{store}_purge_ckpt",
+    )
     try:
         q.processAllAvailable()
         spark.createDataFrame([(21,), (999,)], "doc_id BIGINT").write.mode(
@@ -2354,7 +2365,7 @@ def test_decayed_topk_maintenance_matches_batch_and_survives_replay(
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
         decayed_counts_merge_fn,
-        decayed_topk_maintenance,
+        maintain,
     )
 
     src = str(tmp_path / "src")
@@ -2385,7 +2396,7 @@ def test_decayed_topk_maintenance_matches_batch_and_survives_replay(
     b2 = mk(100, 2, 2, 10)
     b1.write.mode("overwrite").parquet(src)
     stream = events_file_stream(spark, src)
-    q = decayed_topk_maintenance(stream, store)
+    q = maintain(stream, decayed_counts_merge_fn(spark, store), f"{store}_ckpt")
 
     def counts_of(path):
         return {
@@ -2456,7 +2467,7 @@ def test_embedding_drift_maintenance_matches_batch_and_survives_replay(
     )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
         emb_drift_merge_fn,
-        embedding_drift_maintenance,
+        maintain,
     )
 
     src = str(tmp_path / "vec_src")
@@ -2480,7 +2491,7 @@ def test_embedding_drift_maintenance_matches_batch_and_survives_replay(
     b1, b2 = mk(0, 6), mk(100, 5)
     b1.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(b1.schema).parquet(src)
-    q = embedding_drift_maintenance(stream, store)
+    q = maintain(stream, emb_drift_merge_fn(spark, store), f"{store}_ckpt")
 
     def sums_of(path):
         return {
