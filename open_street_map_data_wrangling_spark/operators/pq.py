@@ -1294,18 +1294,20 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> None:
     maintain → compact), same role as layout.optimize_zorder for the
     corpus: at 100 TB thousands of small per-batch files per cell
     degrade the probe's scan, and the nightly compaction restores
-    one-file-per-cell locality.  Stage-then-swap commit: the rewrite
-    reads the files it replaces, so it materializes to a side dir
-    first (the rollup_merge_fn pattern)."""
+    one-file-per-cell locality."""
     from pyspark.sql import Window as _W
 
-    codes = spark.read.parquet(f"{path}/codes")
+    from ..streaming.jobs import _rewrite_store
+
     # drop/withColumn, not an explicit column list: a store built
     # with meta columns (filtered serving) must keep them through
     # compaction — the earlier fixed select silently stripped the
     # label column from meta stores (the meta-lifecycle pytest)
-    latest = (
-        codes.withColumn(
+    _rewrite_store(
+        spark,
+        f"{path}/codes",
+        lambda exists: spark.read.parquet(f"{path}/codes")
+        .withColumn(
             "__rn",
             F.row_number().over(
                 _W.partitionBy("vec_id").orderBy(F.desc("__batch"))
@@ -1313,22 +1315,9 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> None:
         )
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-        .withColumn("__batch", F.lit(0))
+        .withColumn("__batch", F.lit(0)),
+        partition_by=("cid", "__batch"),
     )
-    stage = f"{path}/codes_compact_stage"
-    latest.hint("rebalance", "cid", "__batch").write.mode(
-        "overwrite"
-    ).partitionBy("cid", "__batch").parquet(stage)
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    codes_path = jvm.org.apache.hadoop.fs.Path(f"{path}/codes")
-    fs = codes_path.getFileSystem(hconf)
-    spark.read.parquet(stage).hint(
-        "rebalance", "cid", "__batch"
-    ).write.mode("overwrite").partitionBy("cid", "__batch").parquet(
-        f"{path}/codes"
-    )
-    fs.delete(jvm.org.apache.hadoop.fs.Path(stage), True)
 
 
 def purge_ivfpq_index(
@@ -1356,23 +1345,9 @@ def purge_ivfpq_index(
     For non-seed ids the purged store is row-identical to a fresh
     build over the filtered corpus (same frozen model — pinned in
     tests/test_tombstone.py), and q_tombstone_served's oracle proves
-    the served ADC ranking equals the filtered recompute.
-    Commit is the streaming stores' rename protocol (ADVICE r12: a
-    second overwrite into the live path deletes the live dir before
-    rewriting, so a crash mid-commit left the serving store
-    missing/partial): the staged rewrite is fully written, then the
-    live codes dir is deleted and the stage RENAMED over it — the
-    only crash window is delete→rename, and the recover step at the
-    top of every purge/compact/serve-adjacent rewrite closes it."""
-    from ..streaming.jobs import _commit_store, _recover_store
+    the served ADC ranking equals the filtered recompute."""
+    from ..streaming.jobs import _purge_store
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    codes_path = jvm.org.apache.hadoop.fs.Path(f"{path}/codes")
-    stage_path = jvm.org.apache.hadoop.fs.Path(f"{path}/codes_purge_stage")
-    fs = codes_path.getFileSystem(hconf)
-    _recover_store(fs, codes_path, stage_path)
-    dele = deleted.select("vec_id").distinct()
     seeds = spark.read.schema(
         "vec_id BIGINT, embedding ARRAY<FLOAT>, n_centroids INT"
     ).parquet(f"{path}/seeds")
@@ -1383,7 +1358,11 @@ def purge_ivfpq_index(
         # the anti-join could no-op (the empty-input sweep contract)
         return
     hit = (
-        seeds.join(F.broadcast(dele), "vec_id", "left_semi")
+        seeds.join(
+            F.broadcast(deleted.select("vec_id").distinct()),
+            "vec_id",
+            "left_semi",
+        )
         .select("vec_id")
         .collect()
     )
@@ -1395,31 +1374,28 @@ def purge_ivfpq_index(
             "model rebuild — build_ivfpq_index over the filtered "
             "corpus — not a row purge"
         )
-    kept = (
-        spark.read.parquet(f"{path}/codes")
-        .join(F.broadcast(dele), "vec_id", "left_anti")
+    _purge_store(
+        spark,
+        f"{path}/codes",
+        lambda: spark.read.parquet(f"{path}/codes"),
+        deleted,
+        key="vec_id",
+        partition_by=("cid", "__batch"),
     )
-    kept.hint("rebalance", "cid", "__batch").write.mode(
-        "overwrite"
-    ).partitionBy("cid", "__batch").parquet(str(stage_path))
-    _commit_store(fs, codes_path, stage_path)
     # probes/ (the standing range-search batch) holds ORDINARY corpus
-    # rows, not model parameters — purge them like codes/, same
-    # stage-rename protocol, so a forgotten document's raw vector
-    # cannot linger as a query template (ann_range_search then skips
-    # the probe, exactly as if the row had never been ingested)
-    probes_path = jvm.org.apache.hadoop.fs.Path(f"{path}/probes")
-    pstage_path = jvm.org.apache.hadoop.fs.Path(
-        f"{path}/probes_purge_stage"
+    # rows, not model parameters — purge them like codes/, so a
+    # forgotten document's raw vector cannot linger as a query
+    # template (ann_range_search then skips the probe, exactly as if
+    # the row had never been ingested)
+    _purge_store(
+        spark,
+        f"{path}/probes",
+        lambda: spark.read.schema(
+            "vec_id BIGINT, embedding ARRAY<FLOAT>"
+        ).parquet(f"{path}/probes"),
+        deleted,
+        key="vec_id",
     )
-    if fs.exists(probes_path):
-        _recover_store(fs, probes_path, pstage_path)
-        spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>").parquet(
-            f"{path}/probes"
-        ).join(F.broadcast(dele), "vec_id", "left_anti").write.mode(
-            "overwrite"
-        ).parquet(str(pstage_path))
-        _commit_store(fs, probes_path, pstage_path)
 
 
 # ---------------------------------------------------------------------------

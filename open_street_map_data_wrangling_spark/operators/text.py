@@ -1422,8 +1422,7 @@ def purge_bm25_index(
     pure functions of text, the purged store is ROW-IDENTICAL to a
     fresh build over the filtered corpus — pinned in
     tests/test_tombstone.py, and q_tombstone_served's oracle proves
-    the SERVED ranking equals the filtered-corpus recompute.
-    Stage-rename commit (streaming.jobs protocol) guards readers; a
+    the SERVED ranking equals the filtered-corpus recompute.  A
     crash between the postings commit and the stats refresh leaves a
     consistent store one stats-refresh behind, restored by the next
     maintenance batch (the bm25_index_merge_fn contract).
@@ -1436,32 +1435,23 @@ def purge_bm25_index(
     unchanged."""
     from pyspark.errors import AnalysisException
 
-    from ..streaming.jobs import _commit_store, _recover_store
+    from ..streaming.jobs import _rewrite_store
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    store_path = jvm.org.apache.hadoop.fs.Path(f"{index_path}/postings")
-    stage_path = jvm.org.apache.hadoop.fs.Path(
-        f"{index_path}/postings_stage"
-    )
-    fs = store_path.getFileSystem(hconf)
-    _recover_store(fs, store_path, stage_path)
-    try:
-        post = spark.read.parquet(f"{index_path}/postings")
-    except AnalysisException:
-        return  # fileless (empty-corpus) store: nothing to purge
-    kept = post.join(
-        F.broadcast(deleted.select("doc_id").distinct()),
-        "doc_id",
-        "left_anti",
-    )
-    kept.hint("rebalance", "bkt").write.mode("overwrite").partitionBy(
-        "bkt"
-    ).parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
-    write_bm25_stats(
-        spark.read.parquet(f"{index_path}/postings"), index_path
-    )
+    store_dir = f"{index_path}/postings"
+
+    def build(exists):
+        try:
+            post = spark.read.parquet(store_dir)
+        except AnalysisException:
+            return None  # fileless (empty-corpus) store: nothing to purge
+        return post.join(
+            F.broadcast(deleted.select("doc_id").distinct()),
+            "doc_id",
+            "left_anti",
+        )
+
+    if _rewrite_store(spark, store_dir, build, partition_by=("bkt",)):
+        write_bm25_stats(spark.read.parquet(store_dir), index_path)
 
 
 def bm25_search(
@@ -2133,7 +2123,6 @@ def rrf_search(
     terms: tuple[str, ...] = _BM25_TERMS,
     query_id: int = _RRF_QVEC,
     nprobe: int = _RRF_NPROBE,
-    shortlist: int | None = None,
     list_n: int = _RRF_LIST,
     k: int = _RRF_TOP,
 ) -> DataFrame:
@@ -2153,26 +2142,16 @@ def rrf_search(
       arithmetic verbatim), top-``list_n`` → vec_rank;
     * fusion: the shared integer RRF formula, top-``k``.
 
-    ``shortlist=L`` inserts the PQ-ADC compressed top-L between the
-    probe and the exact rerank (the q_ann_rerank stage) so the
-    full-precision math touches O(L), not O(cell) rows — the knob for
-    cells too large to rerank exactly.  It is OFF by default because
-    it trades recall for arithmetic: on the fixture the exact top-20's
-    worst ADC rank inside the probed cells is 333 (sf0.1), so L=50
-    would demote true neighbors, while the probed cells themselves do
-    contain the entire exact top-20 at nprobe={_RRF_NPROBE} (measured
-    across sf0.001/0.01/0.1).  Exact-within-probed-cells is the
-    IVF-Flat posture: at 100 TB the rerank still reads only
-    nprobe/C of the vector bytes, partition-pruned."""
+    The rerank is exact over the probed cells, not over a PQ-ADC
+    shortlist: on the fixture the exact top-20's worst ADC rank inside
+    the probed cells is 333 (sf0.1), so a 50-row shortlist would
+    demote true neighbors, while the probed cells themselves contain
+    the entire exact top-20 at nprobe={_RRF_NPROBE} (measured across
+    sf0.001/0.01/0.1).  Exact-within-probed-cells is the IVF-Flat
+    posture: at 100 TB the rerank still reads only nprobe/C of the
+    vector bytes, partition-pruned."""
     from ..functions.vectors import cosine_expr
-    from .pq import (
-        _K as _PQ_K,
-        _M as _PQ_M,
-        _SUBDIM as _PQ_SUBDIM,
-        _adc_lut,
-        _load_ivfpq_seeds,
-        _quantize,
-    )
+    from .pq import _load_ivfpq_seeds
     from .similarity import _rank_cells_py
 
     bm = bm25_search(spark, bm25_path, terms, k=list_n).select(
@@ -2189,32 +2168,6 @@ def rrf_search(
         .filter(F.col("cid").isin([int(p) for p in probes]))
         .filter(F.col("vec_id") != query_id)
     )
-    if shortlist is not None:
-        cb = [
-            [
-                _quantize(raw[i])[s * _PQ_SUBDIM : (s + 1) * _PQ_SUBDIM]
-                for i in range(_PQ_K)
-            ]
-            for s in range(_PQ_M)
-        ]
-        lut = _adc_lut(cb, _quantize(qv))
-        lut_lit = F.array(
-            *[F.array(*[F.lit(int(d)) for d in row]) for row in lut]
-        ).cast("array<array<bigint>>")
-        adc = " + ".join(
-            f"element_at(element_at(__lut, {s + 1}), code{s} + 1)"
-            for s in range(_PQ_M)
-        )
-        cand = (
-            cand.withColumn("__lut", lut_lit)
-            .select(
-                "vec_id",
-                "embedding",
-                F.expr(f"CAST({adc} AS BIGINT)").alias("adc_d2"),
-            )
-            .orderBy("adc_d2", "vec_id")
-            .limit(shortlist)
-        )
     qlit = "array(" + ", ".join(f"{float(x)!r}D" for x in qv) + ")"
     w_vec = W.orderBy(F.desc("cos"), "doc_id")
     vec = (

@@ -394,35 +394,28 @@ def scd2_merge_fn(spark: SparkSession, target_dir: str):
     of batch arrival order.  The merge itself is the batch operator
     (operators/cdc.scd2_merge): delta broadcast, snapshot streamed,
     never shuffled.  The streaming checkpoint gives each source file
-    exactly-once batch membership; the staged self-read-overwrite is
-    the same commit pattern as rollup_merge_fn (the merge plan reads
-    the files the overwrite deletes, so it materializes to a side
-    path first).  Batches must be key-unique — reduce an ingest
-    stream to latest-per-key upstream (deduped_events is the
-    streaming shape for that)."""
+    exactly-once batch membership.  Batches must be key-unique —
+    reduce an ingest stream to latest-per-key upstream
+    (deduped_events is the streaming shape for that)."""
     from ..operators.cdc import scd2_merge
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        target_path = jvm.org.apache.hadoop.fs.Path(target_dir)
-        fs = target_path.getFileSystem(hconf)
-        if fs.exists(target_path):
+        def build(exists):
+            if batch_df.isEmpty():
+                return None
+            if not exists:  # first batch: every row inserts at gen 1
+                return scd2_merge(batch_df.limit(0), batch_df, gen=1)
             full = spark.read.parquet(target_dir)
             gen = full.agg(F.max("version")).first()[0] + 1
-            merged = scd2_merge(
-                full.filter(F.col("is_current")).select("k", "bal", "seg", "version"),
+            return scd2_merge(
+                full.filter(F.col("is_current")).select(
+                    "k", "bal", "seg", "version"
+                ),
                 batch_df,
                 gen=gen,
             ).unionByName(full.filter(~F.col("is_current")))
-        else:  # first batch: everything is an insert at generation 1
-            merged = scd2_merge(batch_df.limit(0), batch_df, gen=1)
-        stage_dir = f"{target_dir}_stage"
-        merged.write.mode("overwrite").parquet(stage_dir)
-        spark.read.parquet(stage_dir).write.mode("overwrite").parquet(target_dir)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(stage_dir), True)
+
+        _rewrite_store(spark, target_dir, build)
 
     return merge
 
@@ -509,38 +502,127 @@ def near_dedup_merge_fn(spark: SparkSession, store_dir: str, out_dir: str):
     return merge
 
 
-def _store_paths(spark: SparkSession, store_dir: str):
-    """(jvm, fs, store Path, stage Path) for the stage-rename commit
-    protocol shared by the sketch-store merges below."""
+def _recover_store(spark: SparkSession, store_dir: str):
+    """Finish an interrupted commit of ``store_dir`` and return
+    (fs, store Path, stage Path).  The store is only ever deleted
+    AFTER its stage dir is completely written, so a missing store
+    with a present stage means the crash landed between delete and
+    rename — the stage IS the committed state.  Every writer of a
+    store runs this first, so a later write can never orphan it."""
     jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    store_path = jvm.org.apache.hadoop.fs.Path(store_dir)
-    return (
-        jvm,
-        store_path.getFileSystem(hconf),
-        store_path,
-        jvm.org.apache.hadoop.fs.Path(f"{store_dir}_stage"),
+    store = jvm.org.apache.hadoop.fs.Path(store_dir)
+    stage = jvm.org.apache.hadoop.fs.Path(f"{store_dir}_stage")
+    fs = store.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(store) and fs.exists(stage):
+        fs.rename(stage, store)
+    return fs, store, stage
+
+
+def _commit_store(fs, store, stage) -> None:
+    """Publish a fully-written stage dir as the store: delete the old
+    store, rename the stage over it.  The only crash window is
+    between delete and rename, and _recover_store closes it."""
+    if fs.exists(store):
+        fs.delete(store, True)
+    fs.rename(stage, store)
+
+
+def _rewrite_store(
+    spark: SparkSession,
+    store_dir: str,
+    build,
+    marker: str | None = None,
+    partition_by: tuple[str, ...] = (),
+) -> bool:
+    """Replace ``store_dir`` with ``build(exists)`` — the one commit
+    protocol of every maintained store (merges, purges, compactions).
+
+    Recover an interrupted commit, skip if ``marker`` is already in
+    the store, build the new relation (``None`` = nothing to write;
+    ``exists`` says whether a store is there to read), write it to
+    ``{store_dir}_stage`` (rebalanced and partitioned by
+    ``partition_by`` when given), then delete the store and rename
+    the stage over it.  The rewrite reads the files it replaces, so
+    it must land on a side path first; overwriting the live dir
+    would leave a truncated store if the writer died mid-write.
+
+    Markers: a merge or purge that is not idempotent (counter
+    addition or subtraction) names a ``marker`` — ``_applied_<batch
+    id>`` for a merged micro-batch, ``_purged_<md5 of the sorted
+    deleted ids>`` for a deletion request.  Markers are empty files
+    inside the store dir (underscore-prefixed, so parquet readers
+    skip them), and every rewrite copies ALL of the store's
+    ``_applied_*``/``_purged_*`` markers plus the new one into the
+    stage before the rename: rows and the markers that certify them
+    commit together, so a redelivered batch or request is a no-op,
+    and no later rewrite — merge, purge or compaction — can drop a
+    marker another one wrote.  Returns True iff a new store was
+    committed."""
+    fs, store, stage = _recover_store(spark, store_dir)
+    exists = fs.exists(store)
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    if marker and exists and fs.exists(path(f"{store_dir}/{marker}")):
+        return False
+    df = build(exists)
+    if df is None:
+        return False
+    if partition_by:
+        df.hint("rebalance", *partition_by).write.mode(
+            "overwrite"
+        ).partitionBy(*partition_by).parquet(str(stage))
+    else:
+        df.write.mode("overwrite").parquet(str(stage))
+    names = [
+        s.getPath().getName() for s in fs.listStatus(store)
+    ] if exists else []
+    for name in [
+        n for n in names if n.startswith(("_applied_", "_purged_"))
+    ] + ([marker] if marker else []):
+        fs.create(path(f"{stage}/{name}"), True).close()
+    _commit_store(fs, store, stage)
+    return True
+
+
+def _purge_store(
+    spark: SparkSession,
+    store_dir: str,
+    rows,
+    deleted: DataFrame,
+    key: str = "doc_id",
+    partition_by: tuple[str, ...] = (),
+) -> None:
+    """Tombstone purge by row key: rewrite ``store_dir`` as ``rows()``
+    (the store read) minus every row whose ``key`` is in ``deleted``
+    — one broadcast anti-join against the request-sized id set.  A
+    missing store has nothing to purge."""
+    ids = F.broadcast(deleted.select(key).distinct())
+    _rewrite_store(
+        spark,
+        store_dir,
+        lambda exists: rows().join(ids, key, "left_anti") if exists else None,
+        partition_by=partition_by,
     )
 
 
-def _recover_store(fs, store_path, stage_path) -> None:
-    """Finish an interrupted stage-rename commit: the store is only
-    ever deleted AFTER the stage dir is completely written, so a
-    missing store with a present stage means the crash landed between
-    delete and rename — the stage IS the committed state."""
-    if not fs.exists(store_path) and fs.exists(stage_path):
-        fs.rename(stage_path, store_path)
-
-
-def _commit_store(fs, store_path, stage_path) -> None:
-    """Publish a fully-written stage dir as the store: delete the old
-    store, rename the stage over it.  The only crash window is
-    between delete and rename, and _recover_store closes it on the
-    next merge call — the stage is complete by construction when the
-    delete runs, so no state is ever lost mid-commit."""
-    if fs.exists(store_path):
-        fs.delete(store_path, True)
-    fs.rename(stage_path, store_path)
+def _union_merge(
+    spark: SparkSession,
+    store_dir: str,
+    delta: DataFrame,
+    rows,
+    partition_by: tuple[str, ...] = (),
+) -> None:
+    """Set-union merge: the store becomes DISTINCT(``rows()`` (the
+    store read) ∪ ``delta``).  Rows that are a pure function of their
+    document make the merge idempotent, so a redelivered batch needs
+    no marker."""
+    _rewrite_store(
+        spark,
+        store_dir,
+        lambda exists: (
+            rows().unionByName(delta) if exists else delta
+        ).distinct(),
+        partition_by=partition_by,
+    )
 
 
 def hll_merge_fn(spark: SparkSession, store_dir: str):
@@ -549,40 +631,28 @@ def hll_merge_fn(spark: SparkSession, store_dir: str):
     |groups| x 256 (event_type, b, m) rows and a micro-batch folds in
     via max(m) per register.
 
-    The retry-safety story is the OPPOSITE of rollup_merge_fn's:
-    register max is IDEMPOTENT and COMMUTATIVE, so a redelivered
-    batch merged a second time leaves the store bit-identical — no
-    applied-batch marker needed.  The store COMMIT is the remaining
-    hazard: overwriting the store dir in place would leave a
-    truncated store if the writer died mid-overwrite, and a replayed
-    batch would then merge from the truncation, silently losing
-    registers.  Hence stage-then-rename: the merged table is fully
-    written to a stage dir, the old store is deleted, and the stage
-    is renamed into place; a crash between delete and rename is
-    repaired by _recover_store before the next merge reads anything.
-    Replaying a batch against any recovered state is harmless — max
-    is idempotent — so the store after N batches is bit-identical to
+    Register max is IDEMPOTENT and COMMUTATIVE, so a redelivered
+    batch leaves the store bit-identical — no applied-batch marker —
+    and the store after N batches is bit-identical to
     hll_registers() over the concatenated input (pinned in
     tests/test_streaming.py, including under replay)."""
     from ..operators.sketches import hll_registers
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = hll_registers(batch_df, "event_type", "event_id").select(
-            "event_type", "b", "m"
-        )
-        if fs.exists(store_path):
-            current = spark.read.parquet(store_dir)
-            merged = (
-                current.unionByName(delta)
+        def build(exists):
+            delta = hll_registers(batch_df, "event_type", "event_id").select(
+                "event_type", "b", "m"
+            )
+            if not exists:
+                return delta
+            return (
+                spark.read.parquet(store_dir)
+                .unionByName(delta)
                 .groupBy("event_type", "b")
                 .agg(F.max("m").alias("m"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+
+        _rewrite_store(spark, store_dir, build)
 
     return merge
 
@@ -590,15 +660,9 @@ def hll_merge_fn(spark: SparkSession, store_dir: str):
 def cms_merge_fn(spark: SparkSession, store_dir: str):
     """Count-min counter merge — the instructive CONTRAST to
     hll_merge_fn: counter addition is NOT idempotent, so a
-    redelivered batch would double-count every token it carries.
-    The applied-batch markers therefore live INSIDE the store dir as
-    `_applied_<batch_id>` files (underscore-prefixed = invisible to
-    parquet readers, like _SUCCESS): the stage dir is built with the
-    new counters AND the full marker set, then renamed over the store
-    in one _commit_store step — counters and their marker commit
-    atomically, closing both the marker-after-commit double-count
-    window and the mid-overwrite truncation window that a separate
-    marker dir left open.  Token stream matches the batch CMS
+    redelivered batch would double-count every token it carries,
+    so each batch commits an ``_applied_<batch_id>`` marker with its
+    counters (see _rewrite_store).  Token stream matches the batch CMS
     (q_cms_topk) exactly: split on single space, EMPTY TOKENS
     INCLUDED — filtering them here while the batch side counts them
     broke the store==batch invariant for any text with doubled or
@@ -609,51 +673,33 @@ def cms_merge_fn(spark: SparkSession, store_dir: str):
     from ..operators.sketches import _CMS_D, _CMS_W  # noqa: F401
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        tf = (
-            batch_df.select(F.explode(F.split("text", " ")).alias("tok"))
-            .groupBy("tok")
-            .agg(F.count("*").cast("bigint").alias("n"))
-        )
-        delta = None
-        for d in range(_CMS_D):
-            c = tf.groupBy(
-                F.expr(
-                    f"CAST(conv(substring(md5(concat('c{d}:', tok)), 1, 12),"
-                    f" 16, 10) AS BIGINT) % {_CMS_W}"
-                ).alias("pos")
-            ).agg(F.sum("n").cast("bigint").alias("c")).select(
-                F.lit(d).alias("d"), "pos", "c"
+        def build(exists):
+            tf = (
+                batch_df.select(F.explode(F.split("text", " ")).alias("tok"))
+                .groupBy("tok")
+                .agg(F.count("*").cast("bigint").alias("n"))
             )
-            delta = c if delta is None else delta.unionAll(c)
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+            delta = None
+            for d in range(_CMS_D):
+                c = tf.groupBy(
+                    F.expr(
+                        f"CAST(conv(substring(md5(concat('c{d}:', tok)),"
+                        f" 1, 12), 16, 10) AS BIGINT) % {_CMS_W}"
+                    ).alias("pos")
+                ).agg(F.sum("n").cast("bigint").alias("c")).select(
+                    F.lit(d).alias("d"), "pos", "c"
+                )
+                delta = c if delta is None else delta.unionAll(c)
+            if not exists:
+                return delta
+            return (
                 spark.read.parquet(store_dir)
                 .unionByName(delta)
                 .groupBy("d", "pos")
                 .agg(F.sum("c").cast("bigint").alias("c"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        # markers ride in the stage dir so the rename commits them
-        # atomically with the counters they certify
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        _rewrite_store(spark, store_dir, build, f"_applied_{batch_id}")
 
     return merge
 
@@ -685,6 +731,7 @@ def ivfpq_codes_merge_fn(
     from ..operators import pq as pq_mod
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
+        _recover_store(spark, f"{index_path}/codes")
         if batch_df.isEmpty():
             return
         # foreachBatch hands the batch a CLONED SparkSession; the
@@ -727,35 +774,33 @@ def int8_scales_merge_fn(spark: SparkSession, store_dir: str):
     micro-batch's per-dimension max|x| into the (pos, m) store with a
     per-dim MAX — max is idempotent and commutative (the HLL-register
     argument), so redelivered batches are no-ops and no applied-batch
-    markers are needed; stage-rename commit guards readers.  The
-    store is MONOTONE: scales only grow as vectors arrive — exactly
-    what int8 serving needs after corpus growth (the r10 VERDICT
-    deployment failure: serving from scales that predate new
-    out-of-range values mis-weights every dimension they widened).  A
-    re-embedding that shrinks a dimension's range is a rebuild event
-    (similarity.build_int8_scales), the ivfpq-compaction contract."""
+    markers are needed.  The store is MONOTONE: scales only grow as
+    vectors arrive — exactly what int8 serving needs after corpus
+    growth (the r10 VERDICT deployment failure: serving from scales
+    that predate new out-of-range values mis-weights every dimension
+    they widened).  A re-embedding that shrinks a dimension's range
+    is a rebuild event (similarity.build_int8_scales), the
+    ivfpq-compaction contract."""
     from ..operators.similarity import _int8_scales
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = _int8_scales(
-            batch_df.filter(F.col("embedding").isNotNull())
-        )
-        if fs.exists(store_path):
-            merged = (
+        def build(exists):
+            if batch_df.isEmpty():
+                return None
+            delta = _int8_scales(
+                batch_df.filter(F.col("embedding").isNotNull())
+            )
+            if not exists:
+                return delta
+            return (
                 spark.read.schema("pos BIGINT, m DOUBLE")
                 .parquet(store_dir)
                 .unionByName(delta)
                 .groupBy("pos")
                 .agg(F.max("m").alias("m"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+
+        _rewrite_store(spark, store_dir, build)
 
     return merge
 
@@ -768,50 +813,32 @@ def lm_counts_merge_fn(spark: SparkSession, store_dir: str):
     serving is text.lm_score_docs(docs, spark.read.parquet(store)).
 
     Counter addition is not idempotent (the cms_merge_fn lesson), so
-    the applied-batch markers ride INSIDE the stage dir and commit
-    atomically with the counters via the same rename-over-store step —
-    a redelivered micro-batch is a no-op because of the marker, not by
-    luck.  The train-split filter is the SAME md5 nibble rule the
-    batch query trains on, so streamed store == batch LM counts over
-    the concatenated corpus, which the soak test pins exactly."""
+    each batch commits an ``_applied_`` marker.  The train-split
+    filter is the SAME md5 nibble rule the batch query trains on, so
+    streamed store == batch LM counts over the concatenated corpus,
+    which the soak test pins exactly."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        delta = (
-            batch_df.filter(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-                <= "b"
+        def build(exists):
+            delta = (
+                batch_df.filter(
+                    F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
+                    <= "b"
+                )
+                .select(F.explode(F.split("text", " ")).alias("tok"))
+                .groupBy("tok")
+                .agg(F.count("*").cast("bigint").alias("c"))
             )
-            .select(F.explode(F.split("text", " ")).alias("tok"))
-            .groupBy("tok")
-            .agg(F.count("*").cast("bigint").alias("c"))
-        )
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+            if not exists:
+                return delta
+            return (
                 spark.read.parquet(store_dir)
                 .unionByName(delta)
                 .groupBy("tok")
                 .agg(F.sum("c").cast("bigint").alias("c"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        _rewrite_store(spark, store_dir, build, f"_applied_{batch_id}")
 
     return merge
 
@@ -820,9 +847,8 @@ def drift_counts_merge_fn(spark: SparkSession, store_dir: str):
     """Distribution-drift monitor maintenance — the (bkt, n_a, n_b)
     count table of pipeline_ops.q_quality_drift kept current over a
     document stream.  Counter addition is not idempotent (the
-    cms/lm lesson), so the applied-batch markers ride inside the
-    stage dir and commit atomically with the counters via the same
-    rename-over-store step.  The window/bucket tagging is the SAME
+    cms/lm lesson), so each batch commits an ``_applied_`` marker.
+    The window/bucket tagging is the SAME
     drift_counts expression the batch query uses, so streamed store
     == batch counts over the concatenated corpus, and serving the
     full drift report is pipeline_ops.drift_report(read(store)) —
@@ -830,21 +856,11 @@ def drift_counts_merge_fn(spark: SparkSession, store_dir: str):
     from ..operators.pipeline_ops import drift_counts
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        delta = drift_counts(batch_df)
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+        def build(exists):
+            delta = drift_counts(batch_df)
+            if not exists:
+                return delta
+            return (
                 spark.read.parquet(store_dir)
                 .unionByName(delta)
                 .groupBy("bkt")
@@ -853,14 +869,8 @@ def drift_counts_merge_fn(spark: SparkSession, store_dir: str):
                     F.sum("n_b").cast("bigint").alias("n_b"),
                 )
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        _rewrite_store(spark, store_dir, build, f"_applied_{batch_id}")
 
     return merge
 
@@ -871,10 +881,8 @@ def decayed_counts_merge_fn(spark: SparkSession, store_dir: str):
     absolute 3-day-bucket granularity, so the decay NEVER touches
     the stored numbers — age enters only at serve time as a bucket
     shift (sketches.decayed_topk_from_store).  Counter addition is
-    not idempotent, so redelivery protection is the CMS discipline:
-    `_applied_<batch_id>` markers ride INSIDE the store dir and
-    commit atomically with the counts via the shared stage-rename
-    protocol.  The store stays |active users| x |age buckets| rows
+    not idempotent, so each batch commits an ``_applied_`` marker.
+    The store stays |active users| x |age buckets| rows
     whatever the event volume — the compaction that makes a standing
     trending query affordable — and the streamed store equals
     decayed_counts() over everything seen (pinned in
@@ -882,34 +890,18 @@ def decayed_counts_merge_fn(spark: SparkSession, store_dir: str):
     from ..operators.sketches import decayed_counts
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        delta = decayed_counts(batch_df)
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+        def build(exists):
+            delta = decayed_counts(batch_df)
+            if not exists:
+                return delta
+            return (
                 spark.read.parquet(store_dir)
                 .unionByName(delta)
                 .groupBy("user_id", "bkt")
                 .agg(F.sum("cnt").cast("bigint").alias("cnt"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        _rewrite_store(spark, store_dir, build, f"_applied_{batch_id}")
 
     return merge
 
@@ -920,31 +912,19 @@ def emb_drift_merge_fn(spark: SparkSession, store_dir: str):
     of newly ingested vectors folds its quantized component sums and
     counts into the store, so the standing drift report never
     rescans the embeddings history.  Counter addition is not
-    idempotent, so redelivery protection is the CMS discipline:
-    `_applied_<batch_id>` markers ride INSIDE the store dir and
-    commit atomically with the sums via the shared stage-rename
-    protocol.  The store stays 2 x |dims| rows (128 here) whatever
+    idempotent, so each batch commits an ``_applied_`` marker.
+    The store stays 2 x |dims| rows (128 here) whatever
     the ingest volume, and the streamed store equals drift_wave_sums()
     over everything seen (pinned in tests/test_streaming.py,
     including under replay)."""
     from ..operators.similarity import drift_wave_sums
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        delta = drift_wave_sums(batch_df)
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+        def build(exists):
+            delta = drift_wave_sums(batch_df)
+            if not exists:
+                return delta
+            return (
                 spark.read.schema("wave BIGINT, pos BIGINT, s BIGINT, n BIGINT")
                 .parquet(store_dir)
                 .unionByName(delta)
@@ -954,14 +934,8 @@ def emb_drift_merge_fn(spark: SparkSession, store_dir: str):
                     F.sum("n").cast("bigint").alias("n"),
                 )
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        _rewrite_store(spark, store_dir, build, f"_applied_{batch_id}")
 
     return merge
 
@@ -972,42 +946,27 @@ def shard_manifest_merge_fn(spark: SparkSession, store_dir: str):
     arrive IN (source, doc_id) ORDER (the append-only export
     contract: a batch is placed after everything already planned).
     The stored end offset is simply sum(bytes) over the store — no
-    separate state row — so placement is not idempotent and the
-    applied-batch markers ride the same stage-rename commit as every
-    other counter store here.  Every manifest column merges with
+    separate state row — so placement is not idempotent and each
+    batch commits an ``_applied_`` marker.  Every manifest column merges with
     sum/sum/min/max at (shard_id, source) grain, which is why the
     streamed store folded through shard_manifest_fold equals the
     one-shot plan over the concatenated corpus (pytest-pinned)."""
     from ..operators.pipeline_ops import shard_manifest, shard_place
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        prior_markers = []
-        end_offset = 0
-        store = None
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
+        def build(exists):
+            if not exists:
+                return shard_manifest(shard_place(batch_df, 0))
             store = spark.read.parquet(store_dir).select(
                 "shard_id", "source", "n_docs", "bytes",
                 "first_doc", "last_doc",
             )
             # bounded scalar: one aggregate row over the tiny store
-            end_offset = (
-                store.agg(F.sum("bytes")).collect()[0][0] or 0
-            )
-        delta = shard_manifest(shard_place(batch_df, int(end_offset)))
-        if store is not None:
-            merged = (
-                store.unionByName(delta)
+            end_offset = store.agg(F.sum("bytes")).collect()[0][0] or 0
+            return (
+                store.unionByName(
+                    shard_manifest(shard_place(batch_df, int(end_offset)))
+                )
                 .groupBy("shard_id", "source")
                 .agg(
                     F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -1016,14 +975,8 @@ def shard_manifest_merge_fn(spark: SparkSession, store_dir: str):
                     F.max("last_doc").cast("bigint").alias("last_doc"),
                 )
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        _rewrite_store(spark, store_dir, build, f"_applied_{batch_id}")
 
     return merge
 
@@ -1035,50 +988,35 @@ def text_index_merge_fn(spark: SparkSession, index_path: str):
     bucketed with the SAME token-hash rule the batch build uses —
     set-union into postings/.  Idempotent by construction (the
     winnow-print argument: postings are a pure function of the doc,
-    distinct-union absorbs redelivery), so no applied-batch markers;
-    stage-rename commit guards readers.  text.text_search serves
+    distinct-union absorbs redelivery), so no applied-batch markers.
+    text.text_search serves
     from the maintained index unchanged, and streamed == batch-built
     is pytest-pinned."""
     from ..operators.text import _INDEX_BUCKETS
 
+    store_dir = f"{index_path}/postings"
+
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        store_path = jvm.org.apache.hadoop.fs.Path(f"{index_path}/postings")
-        stage_path = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/postings_stage"
-        )
-        fs = store_path.getFileSystem(hconf)
-        _recover_store(fs, store_path, stage_path)
-        delta = (
+        _union_merge(
+            spark,
+            store_dir,
             batch_df.select(
                 "doc_id", F.explode(F.split("text", " ")).alias("tok")
             )
             .filter(F.col("tok") != "")
-            .distinct()
             .withColumn(
                 "bkt",
                 F.pmod(F.xxhash64("tok"), F.lit(_INDEX_BUCKETS)).cast("int"),
-            )
-        )
-        if fs.exists(store_path):
+            ),
             # explicit schema (the text_search convention): an index
             # bootstrapped from an empty corpus leaves a fileless
             # postings dir that EXISTS, and schema inference would
             # crash the first real micro-batch instead of merging
-            merged = (
-                spark.read.schema("doc_id BIGINT, tok STRING, bkt INT")
-                .parquet(f"{index_path}/postings")
-                .select("doc_id", "tok", "bkt")
-                .unionByName(delta)
-                .distinct()
-            )
-        else:
-            merged = delta
-        merged.hint("rebalance", "bkt").write.mode("overwrite").partitionBy(
-            "bkt"
-        ).parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+            lambda: spark.read.schema("doc_id BIGINT, tok STRING, bkt INT")
+            .parquet(store_dir)
+            .select("doc_id", "tok", "bkt"),
+            partition_by=("bkt",),
+        )
 
     return merge
 
@@ -1096,66 +1034,58 @@ def hardneg_cells_merge_fn(spark: SparkSession, index_path: str):
     min-k's (the KMV-sketch merge property), so the maintained store
     is IDENTICAL to a fresh build over the concatenated corpus
     (pytest-pinned) and the set-semantics merge is idempotent — no
-    applied-batch markers, just the stage-rename commit.  The whole
+    applied-batch markers.  The whole
     store is ≤ C × CAP rows, so the rewrite is bounded regardless of
     corpus size.  Append-only ids: re-embedding an existing id is the
     rebuild path's job, as with the ivfpq codes compaction."""
     from ..operators.similarity import (
         _HARDNEG_CELL_CAP,
+        _HARDNEG_SEEDS_DDL,
         _with_cell,
         dot_expr,
     )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        cells_path = jvm.org.apache.hadoop.fs.Path(f"{index_path}/cells")
-        stage_path = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/cells_stage"
-        )
-        fs = cells_path.getFileSystem(hconf)
-        _recover_store(fs, cells_path, stage_path)
-        from ..operators.similarity import _HARDNEG_SEEDS_DDL
+    cells_dir = f"{index_path}/cells"
 
-        seeds = (
-            spark.read.schema(_HARDNEG_SEEDS_DDL)
-            .parquet(f"{index_path}/seeds")
-            .collect()
-        )
-        raw = {
-            int(r["vec_id"]): [float(x) for x in r["embedding"]]
-            for r in seeds
-        }
-        c = int(seeds[0]["n_centroids"]) if seeds else 0
-        if c == 0 or any(i not in raw for i in range(c)):
-            return  # bootstrap index was empty: nothing to tag against
-        cents = [raw[i] for i in range(c)]
-        delta = _with_cell(
-            batch_df.select("vec_id", "embedding"), cents
-        ).select(
-            "vec_id",
-            "embedding",
-            F.sqrt(dot_expr("embedding", "embedding")).alias("nrm"),
-            "cid",
-        )
-        store = spark.read.parquet(f"{index_path}/cells").select(
-            "vec_id", "embedding", "nrm", "cid"
-        )
-        rk_w = W.partitionBy("cid").orderBy(
-            F.md5(F.col("vec_id").cast("string")).asc(),
-            F.col("vec_id").asc(),
-        )
-        merged = (
-            store.unionByName(delta)
-            .distinct()
-            .withColumn("rk", F.row_number().over(rk_w))
-            .filter(F.col("rk") <= _HARDNEG_CELL_CAP)
-            .drop("rk")
-        )
-        merged.hint("rebalance", "cid").write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(str(stage_path))
-        _commit_store(fs, cells_path, stage_path)
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
+        def build(exists):
+            seeds = (
+                spark.read.schema(_HARDNEG_SEEDS_DDL)
+                .parquet(f"{index_path}/seeds")
+                .collect()
+            )
+            raw = {
+                int(r["vec_id"]): [float(x) for x in r["embedding"]]
+                for r in seeds
+            }
+            c = int(seeds[0]["n_centroids"]) if seeds else 0
+            if c == 0 or any(i not in raw for i in range(c)):
+                return None  # bootstrap index was empty: nothing to tag
+            delta = _with_cell(
+                batch_df.select("vec_id", "embedding"),
+                [raw[i] for i in range(c)],
+            ).select(
+                "vec_id",
+                "embedding",
+                F.sqrt(dot_expr("embedding", "embedding")).alias("nrm"),
+                "cid",
+            )
+            store = spark.read.parquet(cells_dir).select(
+                "vec_id", "embedding", "nrm", "cid"
+            )
+            rk_w = W.partitionBy("cid").orderBy(
+                F.md5(F.col("vec_id").cast("string")).asc(),
+                F.col("vec_id").asc(),
+            )
+            return (
+                store.unionByName(delta)
+                .distinct()
+                .withColumn("rk", F.row_number().over(rk_w))
+                .filter(F.col("rk") <= _HARDNEG_CELL_CAP)
+                .drop("rk")
+            )
+
+        _rewrite_store(spark, cells_dir, build, partition_by=("cid",))
 
     return merge
 
@@ -1164,51 +1094,35 @@ def span_gram_merge_fn(spark: SparkSession, store_dir: str):
     """ExactSubstr gram-count maintenance — the corpus-wide
     (g, cnt) table behind q_dup_spans' duplicated-gram set, kept
     current over a document stream.  Counter addition is not
-    idempotent (the cms/drift lesson), so applied-batch markers ride
-    inside the stage dir and commit atomically with the counters.
-    The gram derivation is dedup._span_gram_base — the SAME exact
-    md5 window hash the batch query uses — so the streamed store's
-    cnt >= 2 set over the concatenated corpus equals the batch dup
-    set, and span_dup_coverage_serve scores any doc batch against
-    corpus history with zero history scans: the incremental "how
-    much of this new crawl is already in the corpus" gate."""
+    idempotent (the cms/drift lesson), so each batch commits an
+    ``_applied_`` marker.  The gram derivation is
+    dedup._span_gram_base — the SAME exact md5 window hash the batch
+    query uses — so the streamed store's cnt >= 2 set over the
+    concatenated corpus equals the batch dup set, and
+    span_dup_coverage_serve scores any doc batch against corpus
+    history with zero history scans: the incremental "how much of
+    this new crawl is already in the corpus" gate."""
     from ..operators.dedup import _span_gram_base
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        delta = (
-            _span_gram_base(batch_df.select("doc_id", "text"))
-            .where(F.col("g").isNotNull())
-            .groupBy("g")
-            .agg(F.count("*").cast("bigint").alias("cnt"))
-        )
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+        def build(exists):
+            delta = (
+                _span_gram_base(batch_df.select("doc_id", "text"))
+                .where(F.col("g").isNotNull())
+                .groupBy("g")
+                .agg(F.count("*").cast("bigint").alias("cnt"))
+            )
+            if not exists:
+                return delta
+            return (
                 spark.read.parquet(store_dir)
                 .select("g", "cnt")
                 .unionByName(delta)
                 .groupBy("g")
                 .agg(F.sum("cnt").cast("bigint").alias("cnt"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        _rewrite_store(spark, store_dir, build, f"_applied_{batch_id}")
 
     return merge
 
@@ -1244,31 +1158,20 @@ def winnow_print_merge_fn(spark: SparkSession, store_dir: str):
     is distinct-union, so the operation is IDEMPOTENT by
     construction — a redelivered batch changes nothing and no
     applied-batch markers are needed (the cheap half of the
-    idempotent-vs-marker trade documented on the CMS counter store);
-    the stage-rename commit still guards readers against torn
-    stores.  The store is the incremental clone-detection index: at
+    idempotent-vs-marker trade documented on the CMS counter store).
+    The store is the incremental clone-detection index: at
     2 bigints per print and ~2/(W+1) prints per token it is a small
     constant fraction of corpus size, and serving pairs never
     re-reads any document."""
     from ..operators.text import _winnow_base
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = _winnow_base(
-            batch_df.select("doc_id", "text")
-        ).distinct()
-        if fs.exists(store_path):
-            merged = (
-                spark.read.parquet(store_dir)
-                .select("doc_id", "sel")
-                .unionByName(delta)
-                .distinct()
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+        _union_merge(
+            spark,
+            store_dir,
+            _winnow_base(batch_df.select("doc_id", "text")),
+            lambda: spark.read.parquet(store_dir).select("doc_id", "sel"),
+        )
 
     return merge
 
@@ -1298,26 +1201,15 @@ def purge_span_gram_store(
     its text one last time — the deletion request runs BEFORE the
     corpus rewrite drops the row (the q_tombstone_delete audit's
     ordering).  The purged store equals a rebuild from the filtered
-    corpus (pinned in tests/test_tombstone.py).  Applied-batch
-    markers are carried into the stage dir unchanged — a purge is
-    not a batch and must not disturb redelivery detection —
-    and the stage-rename commit guards readers as ever.
+    corpus (pinned in tests/test_tombstone.py).
 
-    Counter subtraction is NOT idempotent (the same hazard the
-    _applied_ markers close for additive merges), so each deletion
-    request also commits a ``_purged_<request-hash>`` marker into the
-    store dir atomically with the counters it subtracted: the hash is
-    md5 over the sorted deleted doc_ids, so a retried or redelivered
-    request no-ops instead of subtracting shared gram counts a second
-    time (ADVICE r12: a double purge silently under-counted grams
-    shared with surviving docs)."""
+    Counter subtraction is NOT idempotent, so each deletion request
+    commits a ``_purged_<md5 of the sorted deleted doc_ids>`` marker:
+    a retried or redelivered request no-ops instead of subtracting
+    grams shared with surviving docs a second time."""
     from ..operators.dedup import _span_gram_base
 
-    jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
-    if not fs.exists(store_path):
-        return
-    req_row = (
+    h = (
         deleted_docs.select(F.col("doc_id").cast("bigint").alias("doc_id"))
         .distinct()
         .agg(
@@ -1325,40 +1217,28 @@ def purge_span_gram_store(
                 F.concat_ws(",", F.sort_array(F.collect_list("doc_id")))
             ).alias("h")
         )
-        .collect()[0]
+        .collect()[0]["h"]
     )
-    purged_marker = jvm.org.apache.hadoop.fs.Path(
-        f"{store_dir}/_purged_{req_row['h']}"
-    )
-    if fs.exists(purged_marker):
-        return
-    neg = (
-        _span_gram_base(deleted_docs.select("doc_id", "text"))
-        .where(F.col("g").isNotNull())
-        .groupBy("g")
-        .agg((-F.count("*")).cast("bigint").alias("cnt"))
-    )
-    prior_markers = [
-        status.getPath().getName()
-        for status in fs.listStatus(store_path)
-        if status.getPath().getName().startswith(("_applied_", "_purged_"))
-    ]
-    merged = (
-        spark.read.parquet(store_dir)
-        .select("g", "cnt")
-        .unionByName(neg)
-        .groupBy("g")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-        .where(F.col("cnt") > 0)
-    )
-    merged.write.mode("overwrite").parquet(str(stage_path))
-    # the new _purged_ marker rides in the stage dir so the rename
-    # commits it atomically with the subtracted counters it certifies
-    for name in prior_markers + [f"_purged_{req_row['h']}"]:
-        fs.create(
-            jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-        ).close()
-    _commit_store(fs, store_path, stage_path)
+
+    def build(exists):
+        if not exists:
+            return None
+        neg = (
+            _span_gram_base(deleted_docs.select("doc_id", "text"))
+            .where(F.col("g").isNotNull())
+            .groupBy("g")
+            .agg((-F.count("*")).cast("bigint").alias("cnt"))
+        )
+        return (
+            spark.read.parquet(store_dir)
+            .select("g", "cnt")
+            .unionByName(neg)
+            .groupBy("g")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+            .where(F.col("cnt") > 0)
+        )
+
+    _rewrite_store(spark, store_dir, build, f"_purged_{h}")
 
 
 def purge_text_index(
@@ -1373,27 +1253,15 @@ def purge_text_index(
     no corpus stats to refresh (q_text_search ranks by plain match
     counts).  Purged store == fresh build over the filtered corpus
     (tests/test_tombstone.py)."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    store_path = jvm.org.apache.hadoop.fs.Path(f"{index_path}/postings")
-    stage_path = jvm.org.apache.hadoop.fs.Path(
-        f"{index_path}/postings_stage"
+    store_dir = f"{index_path}/postings"
+    _purge_store(
+        spark,
+        store_dir,
+        lambda: spark.read.schema("doc_id BIGINT, tok STRING, bkt INT")
+        .parquet(store_dir),
+        deleted,
+        partition_by=("bkt",),
     )
-    fs = store_path.getFileSystem(hconf)
-    _recover_store(fs, store_path, stage_path)
-    kept = (
-        spark.read.schema("doc_id BIGINT, tok STRING, bkt INT")
-        .parquet(f"{index_path}/postings")
-        .join(
-            F.broadcast(deleted.select("doc_id").distinct()),
-            "doc_id",
-            "left_anti",
-        )
-    )
-    kept.hint("rebalance", "bkt").write.mode("overwrite").partitionBy(
-        "bkt"
-    ).parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
 
 
 def purge_image_prints(
@@ -1402,23 +1270,13 @@ def purge_image_prints(
     """Tombstone purge of the perceptual image-fingerprint store:
     one broadcast anti-join on doc_id — a forgotten image can never
     again be named by image_dedup_check.  Set-union state, no
-    markers; stage-rename commit.  == filtered rebuild
-    (tests/test_tombstone.py)."""
-    _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
-    if not fs.exists(store_path):
-        return
-    kept = (
-        spark.read.schema(_IMAGE_PRINTS_DDL)
-        .parquet(store_dir)
-        .join(
-            F.broadcast(deleted.select("doc_id").distinct()),
-            "doc_id",
-            "left_anti",
-        )
+    markers.  == filtered rebuild (tests/test_tombstone.py)."""
+    _purge_store(
+        spark,
+        store_dir,
+        lambda: spark.read.schema(_IMAGE_PRINTS_DDL).parquet(store_dir),
+        deleted,
     )
-    kept.write.mode("overwrite").parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
 
 
 def purge_contamination_bands(
@@ -1436,21 +1294,12 @@ def purge_contamination_bands(
     the HLL/KMV/CMS sketch stores are fold-only by construction.
     Those are rebuild-required under deletion, the standard sketch
     contract."""
-    _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
-    if not fs.exists(store_path):
-        return
-    kept = (
-        spark.read.schema(_CONTAM_BANDS_DDL)
-        .parquet(store_dir)
-        .join(
-            F.broadcast(deleted.select("doc_id").distinct()),
-            "doc_id",
-            "left_anti",
-        )
+    _purge_store(
+        spark,
+        store_dir,
+        lambda: spark.read.schema(_CONTAM_BANDS_DDL).parquet(store_dir),
+        deleted,
     )
-    kept.write.mode("overwrite").parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
 
 
 def geo_points_merge_fn(spark: SparkSession, store_dir: str):
@@ -1469,6 +1318,7 @@ def geo_points_merge_fn(spark: SparkSession, store_dir: str):
     from ..operators.geo import geo_code_points
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
+        _recover_store(spark, store_dir)
         if batch_df.isEmpty():
             return
         bs = batch_df.sparkSession
@@ -1494,33 +1344,19 @@ def purge_geo_index(
 ) -> None:
     """Tombstone purge of the spatial grid index: drop the deleted
     point ids in one broadcast anti-join rewrite, preserving the
-    superblock + batch partitioning.  Commit is the store rename
-    protocol (ADVICE r12: a second overwrite into the live path
-    deletes the live dir before rewriting, so a crash mid-commit
-    left the store missing/partial) — stage fully written, then
-    delete-old + rename, with _recover_store closing the
-    delete→rename window on the next call.  A forgotten point can
-    never again be returned by proximity_search; == filtered rebuild
+    superblock + batch partitioning.  A forgotten point can never
+    again be returned by proximity_search; == filtered rebuild
     pinned in tests/test_tombstone.py."""
     from ..operators.geo import _GEO_STORE_DDL
 
-    _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
-    if not fs.exists(store_path):
-        return
-    kept = (
-        spark.read.schema(_GEO_STORE_DDL)
-        .parquet(store_dir)
-        .join(
-            F.broadcast(deleted.select("id").distinct()),
-            "id",
-            "left_anti",
-        )
+    _purge_store(
+        spark,
+        store_dir,
+        lambda: spark.read.schema(_GEO_STORE_DDL).parquet(store_dir),
+        deleted,
+        key="id",
+        partition_by=("gbx", "gby", "__batch"),
     )
-    kept.hint("rebalance", "gbx", "gby", "__batch").write.mode(
-        "overwrite"
-    ).partitionBy("gbx", "gby", "__batch").parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
 
 
 def purge_winnow_store(
@@ -1531,24 +1367,15 @@ def purge_winnow_store(
     winnow_pairs_serve can never again pair a forgotten document.
     The store keys prints BY doc_id (unlike the span-gram counters),
     so the request set alone suffices — no text replay.  Set-union
-    state needs no markers (the merge is idempotent); stage-rename
-    commit guards readers.  Purged store == rebuild from the
-    filtered corpus, pinned in tests/test_tombstone.py."""
-    _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
-    if not fs.exists(store_path):
-        return
-    kept = (
-        spark.read.parquet(store_dir)
-        .select("doc_id", "sel")
-        .join(
-            F.broadcast(deleted.select("doc_id").distinct()),
-            "doc_id",
-            "left_anti",
-        )
+    state needs no markers (the merge is idempotent).  Purged store
+    == rebuild from the filtered corpus, pinned in
+    tests/test_tombstone.py."""
+    _purge_store(
+        spark,
+        store_dir,
+        lambda: spark.read.parquet(store_dir).select("doc_id", "sel"),
+        deleted,
     )
-    kept.write.mode("overwrite").parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
 
 
 def contamination_bands_merge_fn(spark: SparkSession, store_dir: str):
@@ -1558,8 +1385,8 @@ def contamination_bands_merge_fn(spark: SparkSession, store_dir: str):
     train-split contamination store.  A doc's bands are a pure
     function of its text and the merge is distinct-union, so the
     operation is IDEMPOTENT (the winnow-store half of the
-    idempotent-vs-marker trade — no applied-batch markers);
-    stage-rename commit guards readers.  The store is the standing
+    idempotent-vs-marker trade — no applied-batch markers).  The
+    store is the standing
     eval gate's state: ~4 rows × (8 bytes + a ~26-char band value)
     per train doc, and checking a NEW test set against the whole
     train history never re-reads a train document
@@ -1567,22 +1394,12 @@ def contamination_bands_merge_fn(spark: SparkSession, store_dir: str):
     from ..operators.dedup import _lsh_bands, minhash_sigs
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = _lsh_bands(
-            minhash_sigs(batch_df.select("doc_id", "text"))
-        ).distinct()
-        if fs.exists(store_path):
-            merged = (
-                spark.read.schema(_CONTAM_BANDS_DDL)
-                .parquet(store_dir)
-                .unionByName(delta)
-                .distinct()
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+        _union_merge(
+            spark,
+            store_dir,
+            _lsh_bands(minhash_sigs(batch_df.select("doc_id", "text"))),
+            lambda: spark.read.schema(_CONTAM_BANDS_DDL).parquet(store_dir),
+        )
 
     return merge
 
@@ -1725,27 +1542,19 @@ def media_prints_merge_fn(
     (multimodal.image_fingerprints / audio_fingerprints /
     video_fingerprints — all column-compatible by design).  A
     fingerprint is a pure function of the media bytes and the merge
-    is distinct-union, so the operation is IDEMPOTENT (no markers);
-    stage-rename commit guards readers.  12 bytes of state per item
+    is distinct-union, so the operation is IDEMPOTENT (no markers).
+    12 bytes of state per item
     makes the store a negligible fraction of any media corpus, and
     checking a NEW batch for near-duplicates of corpus history never
     re-decodes stored media (media_dedup_check below)."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = fingerprints_fn(batch_df.select("doc_id")).distinct()
-        if fs.exists(store_path):
-            merged = (
-                spark.read.schema(_IMAGE_PRINTS_DDL)
-                .parquet(store_dir)
-                .unionByName(delta)
-                .distinct()
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+        _union_merge(
+            spark,
+            store_dir,
+            fingerprints_fn(batch_df.select("doc_id")),
+            lambda: spark.read.schema(_IMAGE_PRINTS_DDL).parquet(store_dir),
+        )
 
     return merge
 
@@ -1834,27 +1643,17 @@ def bm25_index_merge_fn(
     doc and nondeterministic served stats (r10 ADVICE).  Idempotent
     for redelivery (replacing rows with byte-identical rows is a
     no-op and the stats recompute is deterministic) — no
-    applied-batch markers.  Stage-rename commit guards readers; the
-    anti-join keys are the micro-batch's bounded doc set broadcast
-    against the store, so the merge stays a store-sized map-side
-    pass, never a shuffle of the store.  stats/ is
+    applied-batch markers.  The anti-join keys are the micro-batch's
+    bounded doc set broadcast against the store, so the merge stays a
+    store-sized map-side pass, never a shuffle of the store.  stats/ is
     rewritten after the postings commit, so a crash between the two
     leaves a consistent store one stats-refresh behind — the next
     micro-batch (or a zero-row one) restores agreement."""
     from ..operators.text import _bm25_postings, write_bm25_stats
 
+    store_dir = f"{index_path}/postings"
+
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        store_path = jvm.org.apache.hadoop.fs.Path(f"{index_path}/postings")
-        stage_path = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/postings_stage"
-        )
-        fs = store_path.getFileSystem(hconf)
-        _recover_store(fs, store_path, stage_path)
-        delta = _bm25_postings(
-            batch_df.select("doc_id", "text", *meta), meta=meta
-        )
         meta_ddl = "".join(
             f", {m} {batch_df.schema[m].dataType.simpleString()}"
             for m in meta
@@ -1864,7 +1663,13 @@ def bm25_index_merge_fn(
             + meta_ddl
             + ", bkt INT"
         )
-        if fs.exists(store_path):
+
+        def build(exists):
+            delta = _bm25_postings(
+                batch_df.select("doc_id", "text", *meta), meta=meta
+            )
+            if not exists:
+                return delta
             # explicit schema: a store bootstrapped from an empty
             # corpus exists but is fileless (the text_index lesson).
             # Doc-replace merge: drop the store's rows for every doc
@@ -1873,22 +1678,15 @@ def bm25_index_merge_fn(
             # re-ingest replaces its old generation instead of
             # coexisting with it.
             batch_docs = batch_df.select("doc_id").distinct()
-            kept = (
+            return (
                 spark.read.schema(ddl)
-                .parquet(f"{index_path}/postings")
+                .parquet(store_dir)
                 .join(F.broadcast(batch_docs), "doc_id", "left_anti")
+                .unionByName(delta)
             )
-            merged = kept.unionByName(delta)
-        else:
-            merged = delta
-        merged.hint("rebalance", "bkt").write.mode("overwrite").partitionBy(
-            "bkt"
-        ).parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
-        write_bm25_stats(
-            spark.read.schema(ddl).parquet(f"{index_path}/postings"),
-            index_path,
-        )
+
+        _rewrite_store(spark, store_dir, build, partition_by=("bkt",))
+        write_bm25_stats(spark.read.schema(ddl).parquet(store_dir), index_path)
 
     return merge
 
@@ -1903,28 +1701,18 @@ def gram_store_merge_fn(spark: SparkSession, store_dir: str):
     q_gram_novelty hash discipline) into the gram store.  A doc's
     grams are a pure function of its text and the merge is
     distinct-union, so redelivery is a no-op (the winnow-print
-    idempotence argument, no markers); stage-rename commit guards
-    readers.  The store holds one 8-byte hash per distinct corpus
-    gram — the crawl-history index the novelty gate serves from."""
+    idempotence argument, no markers).  The store holds one 8-byte
+    hash per distinct corpus gram — the crawl-history index the
+    novelty gate serves from."""
     from ..functions.textfeat import hashed_shingles
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = hashed_shingles(
-            batch_df.select("doc_id", "text")
-        ).select("shh").distinct()
-        if fs.exists(store_path):
-            merged = (
-                spark.read.schema("shh BIGINT")
-                .parquet(store_dir)
-                .unionByName(delta)
-                .distinct()
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+        _union_merge(
+            spark,
+            store_dir,
+            hashed_shingles(batch_df.select("doc_id", "text")).select("shh"),
+            lambda: spark.read.schema("shh BIGINT").parquet(store_dir),
+        )
 
     return merge
 
@@ -1942,11 +1730,11 @@ def novelty_gate_serve(
     0 against itself."""
     from ..functions.textfeat import hashed_shingles
 
-    _, fs, store_path, _sp = _store_paths(spark, store_dir)
+    store = spark._jvm.org.apache.hadoop.fs.Path(store_dir)
     bg = hashed_shingles(
         batch_docs.select("doc_id", "text")
     ).localCheckpoint(eager=False)
-    if fs.exists(store_path):
+    if store.getFileSystem(spark._jsc.hadoopConfiguration()).exists(store):
         seen = spark.read.schema("shh BIGINT").parquet(store_dir)
         novel = bg.join(seen, "shh", "left_anti")
     else:
@@ -1974,35 +1762,25 @@ def source_gram_merge_fn(spark: SparkSession, store_dir: str):
     gram-hash) rows into the source-gram store — the q_source_overlap
     base kept current over a document stream.  Pure function of each
     doc, distinct-union: idempotent, no markers (the winnow-print
-    argument); stage-rename commit guards readers."""
+    argument)."""
     from ..functions.textfeat import shingles_expr
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = (
+        _union_merge(
+            spark,
+            store_dir,
             batch_df.select(
                 "source", F.explode(shingles_expr()).alias("sh")
-            )
-            .select(
+            ).select(
                 "source",
                 F.expr(
                     "CAST(conv(substring(md5(sh), 1, 15), 16, 10) AS BIGINT)"
                 ).alias("shh"),
-            )
-            .distinct()
+            ),
+            lambda: spark.read.schema("source STRING, shh BIGINT").parquet(
+                store_dir
+            ),
         )
-        if fs.exists(store_path):
-            merged = (
-                spark.read.schema("source STRING, shh BIGINT")
-                .parquet(store_dir)
-                .unionByName(delta)
-                .distinct()
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
 
     return merge
 
@@ -2106,7 +1884,7 @@ def family_registry_merge_fn(spark: SparkSession, store_dir: str):
     Retry-safety: IDEMPOTENT by construction, no markers — a
     redelivered batch's edges contract to self-loops against the
     labels they already produced, the touched set is empty, and the
-    rewrite is bit-identical.  Stage-rename commit guards readers.
+    rewrite is bit-identical.
 
     Since r13 the merge ALSO maintains an edge side-store at
     ``{store_dir}_edges`` — the undirected (least, greatest) set
@@ -2123,9 +1901,9 @@ def family_registry_merge_fn(spark: SparkSession, store_dir: str):
     heals."""
     from ..operators.dedup import connected_components
 
+    edir = f"{store_dir}_edges"
+
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
         ch = (
             F.col("channel").cast("string")
             if "channel" in batch_df.columns
@@ -2147,22 +1925,21 @@ def family_registry_merge_fn(spark: SparkSession, store_dir: str):
         )
         e = ech.select("a", "b").distinct()
         # edge side-store first (see docstring for the crash order)
-        edir = f"{store_dir}_edges"
-        _, efs, estore, estage = _store_paths(spark, edir)
-        _recover_store(efs, estore, estage)
-        if efs.exists(estore):
-            eall = (
-                spark.read.schema(_FAMILY_EDGE_DDL)
-                .parquet(edir)
-                .unionByName(ech)
-                .distinct()
-                .localCheckpoint()
-            )
-        else:
-            eall = ech
-        eall.write.mode("overwrite").parquet(str(estage))
-        _commit_store(efs, estore, estage)
-        if fs.exists(store_path):
+        _rewrite_store(
+            spark,
+            edir,
+            lambda exists: spark.read.schema(_FAMILY_EDGE_DDL)
+            .parquet(edir)
+            .unionByName(ech)
+            .distinct()
+            .localCheckpoint()
+            if exists
+            else ech,
+        )
+        _rewrite_store(spark, store_dir, lambda exists: relabel(e, exists))
+
+    def relabel(e: DataFrame, exists: bool) -> DataFrame:
+        if exists:
             lab = (
                 spark.read.schema(_FAMILY_DDL)
                 .parquet(store_dir)
@@ -2202,16 +1979,13 @@ def family_registry_merge_fn(spark: SparkSession, store_dir: str):
                 F.col("n").alias("cluster_id"),
                 F.col("cluster_id").alias("__new"),
             )
-            merged = base.join(relab, "cluster_id", "left").select(
+            return base.join(relab, "cluster_id", "left").select(
                 "n",
                 F.coalesce("__new", "cluster_id")
                 .cast("bigint")
                 .alias("cluster_id"),
             )
-        else:
-            merged = base
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+        return base
 
     return merge
 
@@ -2311,66 +2085,59 @@ def family_registry_purge(
     reverse order could strand a split forever."""
     from ..operators.dedup import connected_components
 
-    _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
     edir = f"{store_dir}_edges"
-    _, efs, estore, estage = _store_paths(spark, edir)
-    _recover_store(efs, estore, estage)
     ts = (
         tombstones.select(F.col("doc_id").cast("bigint").alias("n"))
         .where(F.col("n").isNotNull())
         .distinct()
         .localCheckpoint()
     )
-    lab = (
-        spark.read.schema(_FAMILY_DDL).parquet(store_dir).localCheckpoint()
+    _rewrite_store(
+        spark,
+        edir,
+        lambda exists: spark.read.schema(_FAMILY_EDGE_DDL)
+        .parquet(edir)
+        .join(F.broadcast(ts.select(F.col("n").alias("a"))), "a", "left_anti")
+        .join(F.broadcast(ts.select(F.col("n").alias("b"))), "b", "left_anti")
+        .select("a", "b", "channel"),  # anti-joins rotate keys to front
     )
-    edges = (
-        spark.read.schema(_FAMILY_EDGE_DDL).parquet(edir).localCheckpoint()
-    )
-    touched = (
-        lab.join(F.broadcast(ts), "n")
-        .select("cluster_id")
-        .distinct()
-        .localCheckpoint()
-    )
-    surv = (
-        edges.join(
-            F.broadcast(ts.select(F.col("n").alias("a"))), "a", "left_anti"
+
+    def relabel(exists: bool) -> DataFrame:
+        lab = (
+            spark.read.schema(_FAMILY_DDL).parquet(store_dir).localCheckpoint()
         )
-        .join(
-            F.broadcast(ts.select(F.col("n").alias("b"))), "b", "left_anti"
+        touched = (
+            lab.join(F.broadcast(ts), "n")
+            .select("cluster_id")
+            .distinct()
+            .localCheckpoint()
         )
-        .select("a", "b", "channel")  # anti-joins rotate keys to front
-        .localCheckpoint()
-    )
-    # an edge's endpoints share a cluster by invariant, so joining
-    # endpoint a to the labels classifies the whole edge
-    sub = (
-        surv.join(
-            lab.select(F.col("n").alias("a"), "cluster_id"), "a"
+        # the surviving edges just committed; an edge's endpoints share
+        # a cluster by invariant, so joining endpoint a to the labels
+        # classifies the whole edge
+        sub = (
+            spark.read.schema(_FAMILY_EDGE_DDL)
+            .parquet(edir)
+            .join(lab.select(F.col("n").alias("a"), "cluster_id"), "a")
+            .join(F.broadcast(touched), "cluster_id", "left_semi")
+            .select("a", "b")
+            .localCheckpoint()
         )
-        .join(F.broadcast(touched), "cluster_id", "left_semi")
-        .select("a", "b")
-        .localCheckpoint()
-    )
-    nodes = (
-        sub.select(F.col("a").alias("n"))
-        .unionByName(sub.select(F.col("b").alias("n")))
-        .distinct()
-    )
-    if sub.head(1):
-        relab = connected_components(sub, nodes)
-    else:
-        relab = spark.createDataFrame([], _FAMILY_DDL)
-    kept = lab.join(F.broadcast(touched), "cluster_id", "left_anti").select(
-        "n", "cluster_id"
-    )
-    new_lab = kept.unionByName(relab.select("n", "cluster_id"))
-    surv.write.mode("overwrite").parquet(str(estage))
-    _commit_store(efs, estore, estage)
-    new_lab.write.mode("overwrite").parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
+        nodes = (
+            sub.select(F.col("a").alias("n"))
+            .unionByName(sub.select(F.col("b").alias("n")))
+            .distinct()
+        )
+        if sub.head(1):
+            relab = connected_components(sub, nodes)
+        else:
+            relab = spark.createDataFrame([], _FAMILY_DDL)
+        kept = lab.join(
+            F.broadcast(touched), "cluster_id", "left_anti"
+        ).select("n", "cluster_id")
+        return kept.unionByName(relab.select("n", "cluster_id"))
+
+    _rewrite_store(spark, store_dir, relabel)
 
 
 def family_registry_compact(
@@ -2385,34 +2152,23 @@ def family_registry_compact(
     a serve pays file-open cost instead of scan cost.  Compaction
     rewrites each store's rows VERBATIM (no dedup, no filter — the
     relation must be bit-identical, pinned in tests/test_streaming)
-    coalesced to ``target_files`` leaves, via the same stage-rename
-    commit every other rewrite uses, preserving any
-    ``_applied_``/``_purged_`` markers a store carries (the family
-    stores are marker-free today; the copy is the forward-safe
-    default the span-gram purge established).  Labels and edges are
+    coalesced to ``target_files`` leaves.  Labels and edges are
     committed independently — each store is internally consistent at
     every instant, and compaction changes no rows, so there is no
     cross-store ordering to protect.  At 100 TB a deployment sizes
     ``target_files`` by bytes (≈1 GiB per file); the fixture default
     folds each store to one leaf."""
-    edir = f"{store_dir}_edges"
-    jvm = spark._jvm
-    for path_str, ddl in ((edir, _FAMILY_EDGE_DDL), (store_dir, _FAMILY_DDL)):
-        _, fs, store_path, stage_path = _store_paths(spark, path_str)
-        _recover_store(fs, store_path, stage_path)
-        if not fs.exists(store_path):
-            continue
-        rows = (
-            spark.read.schema(ddl).parquet(path_str).localCheckpoint()
+    for path, ddl in (
+        (f"{store_dir}_edges", _FAMILY_EDGE_DDL),
+        (store_dir, _FAMILY_DDL),
+    ):
+        _rewrite_store(
+            spark,
+            path,
+            lambda exists, path=path, ddl=ddl: spark.read.schema(ddl)
+            .parquet(path)
+            .localCheckpoint()
+            .coalesce(target_files)
+            if exists
+            else None,
         )
-        rows.coalesce(target_files).write.mode("overwrite").parquet(
-            str(stage_path)
-        )
-        for status in fs.listStatus(store_path):
-            name = status.getPath().getName()
-            if name.startswith(("_applied_", "_purged_")):
-                fs.create(
-                    jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"),
-                    True,
-                ).close()
-        _commit_store(fs, store_path, stage_path)

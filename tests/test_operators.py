@@ -2156,10 +2156,9 @@ def test_rrf_served_matches_inline_fusion(spark, tmp_path):
     """q_rrf_served / rrf_search (X76): the zero-corpus-scan serve
     path must return EXACTLY q_rrf_fusion's exhaustive ranking on the
     fixture (the probed cells contain the whole exact top-20 —
-    measured across all SFs), the ADC-shortlist variant stays a valid
-    ranking over the same candidate universe, and an index pair built
-    from an empty embeddings table degrades to the BM25-only fusion
-    instead of raising."""
+    measured across all SFs), and an index pair built from an empty
+    embeddings table degrades to the BM25-only fusion instead of
+    raising."""
     import open_street_map_data_wrangling_spark.operators.pq as pq
     import open_street_map_data_wrangling_spark.operators.text as tx
     from open_street_map_data_wrangling_spark.sources.catalog import (
@@ -2171,20 +2170,9 @@ def test_rrf_served_matches_inline_fusion(spark, tmp_path):
     got = [tuple(r) for r in tx.q_rrf_served(spark, sf).collect()]
     assert got == want and got
 
-    # ADC-shortlist knob: still a well-formed top-10 fusion; the
-    # lexical leg is identical, only vec ranks may shift (the
-    # documented recall tradeoff)
     docs = load_table(spark, sf, "documents")
-    emb = load_table(spark, sf, "embeddings")
-    bmp, pqp = str(tmp_path / "bm25"), str(tmp_path / "ivfpq")
+    bmp = str(tmp_path / "bm25")
     tx.build_bm25_index(docs, bmp)
-    pq.build_ivfpq_index(emb, pqp)
-    sl = [tuple(r) for r in
-          tx.rrf_search(spark, bmp, pqp, shortlist=50).collect()]
-    assert [r[0] for r in sl] == list(range(1, len(sl) + 1))
-    assert {r[1] for r in sl if r[2] is not None} <= {
-        w[1] for w in want if w[2] is not None
-    } | {r[1] for r in sl}  # bm docs are shared; structure sanity
 
     # empty vector index: bm25-only fusion, vec_rank all NULL
     eidx = str(tmp_path / "ivfpq_empty")

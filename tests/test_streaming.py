@@ -2544,3 +2544,83 @@ def test_embedding_drift_maintenance_matches_batch_and_survives_replay(
     os.rename(store, f"{store}_stage")
     emb_drift_merge_fn(spark, store)(b1, batch_id=0)  # marker no-op
     assert spark.read.parquet(store).count() > 0
+
+
+def test_scd2_merge_recovers_interrupted_commit(spark, tmp_path):
+    """A crash between the store delete and the stage rename leaves
+    only ``{target}_stage``: the next batch must recover the staged
+    dimension before merging, so every generation survives instead
+    of the batch being treated as the first one."""
+    import os
+
+    from open_street_map_data_wrangling_spark.streaming.jobs import (
+        scd2_merge_fn,
+    )
+
+    target = str(tmp_path / "dim")
+
+    def mk(rows):
+        return spark.createDataFrame(rows, "k long, bal double, seg string")
+
+    merge = scd2_merge_fn(spark, target)
+    merge(mk([(1, 10.0, "A"), (2, 5.0, "B")]), 0)
+    merge(mk([(1, 20.0, "A")]), 1)
+    os.rename(target, f"{target}_stage")
+    merge(mk([(2, 7.0, "B")]), 2)
+    got = {
+        (r.k, r.bal, r.version, r.is_current)
+        for r in spark.read.parquet(target).collect()
+    }
+    assert got == {
+        (1, 10.0, 1, False),
+        (1, 20.0, 2, True),
+        (2, 5.0, 1, False),
+        (2, 7.0, 3, True),
+    }
+
+
+def _ivfpq_code_rows(spark, path):
+    cols = ["vec_id", "cid", "code0", "code1", "code2", "code3"]
+    return {
+        tuple(r)
+        for r in spark.read.parquet(f"{path}/codes").select(*cols).collect()
+    }
+
+
+def test_ivfpq_compaction_recovers_interrupted_commit(spark, sf_dir, tmp_path):
+    """compact_ivfpq_index after a crashed rewrite of codes/ (store
+    renamed to ``codes_stage``) recovers the staged codes first: the
+    compacted rows equal the pre-crash rows."""
+    import os
+
+    from open_street_map_data_wrangling_spark.operators import pq
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    path = str(tmp_path / "idx")
+    pq.build_ivfpq_index(emb, path)
+    before = _ivfpq_code_rows(spark, path)
+    os.rename(f"{path}/codes", f"{path}/codes_stage")
+    pq.compact_ivfpq_index(spark, path)
+    assert _ivfpq_code_rows(spark, path) == before and len(before) == 500
+
+
+def test_ivfpq_codes_merge_recovers_crashed_purge(spark, sf_dir, tmp_path):
+    """The in-place codes writer runs the same recovery step: after a
+    purge crashed between deleting codes/ and renaming its stage, the
+    next maintenance batch must land NEXT TO the pre-crash codes, not
+    start a fresh codes/ that orphans them."""
+    import os
+
+    from open_street_map_data_wrangling_spark.operators import pq
+    from open_street_map_data_wrangling_spark.streaming.jobs import (
+        ivfpq_codes_merge_fn,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    path = str(tmp_path / "idx")
+    pq.build_ivfpq_index(emb.filter(F.col("vec_id") < 300), path)
+    os.rename(f"{path}/codes", f"{path}/codes_stage")
+    ivfpq_codes_merge_fn(spark, path)(
+        emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400)), 0
+    )
+    assert {r[0] for r in _ivfpq_code_rows(spark, path)} == set(range(400))

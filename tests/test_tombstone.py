@@ -139,6 +139,39 @@ def test_purge_span_gram_store_matches_filtered_rebuild(spark, tmp_path):
     assert cnt(purged) == cnt(rebuilt)
 
 
+def test_span_gram_merge_keeps_purged_marker(spark, tmp_path):
+    """A merge after a purge must carry the purge's ``_purged_``
+    marker into its rewrite: otherwise a redelivered deletion request
+    finds no marker and subtracts grams shared with surviving docs a
+    second time."""
+    from open_street_map_data_wrangling_spark.streaming.jobs import (
+        purge_span_gram_store,
+        span_gram_merge_fn,
+    )
+
+    docs = load_table(spark, SF, "documents").filter("doc_id < 160").select(
+        "doc_id", "text"
+    )
+    b0, b1 = docs.filter("doc_id < 80"), docs.filter("doc_id >= 80")
+    req = b0.filter(TOMB)
+    store = str(tmp_path / "span_store")
+    rebuilt = str(tmp_path / "span_rebuilt")
+    span_gram_merge_fn(spark, store)(b0, 0)
+    purge_span_gram_store(spark, store, req)
+    span_gram_merge_fn(spark, store)(b1, 1)
+    purge_span_gram_store(spark, store, req)  # redelivered request
+    span_gram_merge_fn(spark, rebuilt)(
+        b0.filter(f"NOT {TOMB}").unionByName(b1), 0
+    )
+
+    cnt = lambda d: {
+        (r["g"], r["cnt"]) for r in spark.read.parquet(d).collect()
+    }
+    assert cnt(store) == cnt(rebuilt) and cnt(store)
+    names = [p.name for p in (tmp_path / "span_store").iterdir()]
+    assert any(n.startswith("_purged_") for n in names)
+
+
 def test_purge_winnow_store_matches_filtered_rebuild(spark, tmp_path):
     """Print rows key by doc_id, so the purge is a pure anti-join:
     store == rebuild over the filtered corpus and the served clone
